@@ -1016,7 +1016,8 @@ object SimilarityOps {
       val selected = scala.collection.mutable.ArrayBuffer[Long]()
       val remaining = scala.collection.mutable.Set[Long](rel.keySet.toSeq: _*)
       for (r <- 1 to math.min(nSelect, qc.length)) {
-        var bestC = Long.MinValue
+        var first = true
+        var bestC = 0L
         var bestS = Double.NaN
         remaining.foreach { c =>
           val score =
@@ -1029,8 +1030,8 @@ object SimilarityOps {
               }
               rel(c) * 0.5 - maxsim * 0.5
             }
-          if (bestC == Long.MinValue || better(score, c, bestS, bestC)) {
-            bestC = c; bestS = score
+          if (first || better(score, c, bestS, bestC)) {
+            first = false; bestC = c; bestS = score
           }
         }
         out += ((q, bestC, r.toLong, bestS))

@@ -26,13 +26,20 @@ object StreamingJobs {
     // decode path shared with the batch reader (Tables.eventsDecode):
     // the generator's ts annotation changed across driver rounds
     val (schema, normalizeTs) = Tables.eventsDecode(spark, dir)
-    normalizeTs(
-      spark.readStream
-        .schema(schema)
-        // file-stream sources list a DIRECTORY; select the one table file
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    normalizeTs(tableStream(spark, dir, "events.parquet", schema))
   }
+
+  /** A file-stream source over the watched directory `dir` that ingests
+    * every file named `table` at any depth below it: the table itself and
+    * later deliveries such as `<dir>/b1/<table>`. Without the recursive
+    * lookup a file-stream source lists only `dir`'s own files. */
+  private def tableStream(spark: SparkSession, dir: String, table: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", table)
+      .parquet(dir)
 
   /** embeddings.parquet as a streaming source — vectors arriving live
     * (ingest path of a vector index). */
@@ -42,10 +49,7 @@ object StreamingJobs {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
-    spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    tableStream(spark, dir, "embeddings.parquet", schema)
   }
 
   /** documents.parquet as a streaming source — the corpus-ingest replay
@@ -58,10 +62,7 @@ object StreamingJobs {
       StructField("lang", StringType),
       StructField("source", StringType),
       StructField("n_chars", LongType)))
-    spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    tableStream(spark, dir, "documents.parquet", schema)
   }
 
   /** ONLINE dedup over the replayed corpus: md5 content hash per document,

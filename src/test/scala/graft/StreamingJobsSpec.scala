@@ -56,6 +56,36 @@ class StreamingJobsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming page views ingest a later delivery under the watched directory") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pv_deliveries")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "events.parquet"),
+      dir.resolve("events.parquet"))
+    // the second delivery: the same events 60 days later, so none is late
+    val (schema, _) = graft.sources.Tables.eventsDecode(spark, sf0001)
+    val shift = schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => col("ts") + lit(60L * 86400 * 1000000000L)
+      case _ => col("ts") + expr("INTERVAL 60 DAYS")
+    }
+    val staged = dir.resolve("_staged").toString
+    spark.read.schema(schema).parquet(s"$sf0001/events.parquet")
+      .withColumn("ts", shift).coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val views = graft.sources.Tables.events(spark, sf0001)
+      .filter(col("event_type") === "view").count()
+    val q = StreamingJobs.pageViewsStream(spark, dir.toString)
+      .writeStream.format("memory").queryName("pv_deliveries").outputMode("complete").start()
+    def counted(): Long =
+      spark.table("pv_deliveries").agg(sum("cnt")).as[Option[Long]].head().getOrElse(0L)
+    try {
+      q.processAllAvailable()
+      assert(counted() == views)
+      java.nio.file.Files.createDirectory(dir.resolve("b1"))
+      java.nio.file.Files.move(part.toPath, dir.resolve("b1/events.parquet"))
+      q.processAllAvailable()
+      assert(counted() == 2 * views, "the b1 delivery's views are counted")
+    } finally q.stop()
+  }
+
   test("streaming hot-items ranking matches the batch query") {
     val batch = BehaviorQueries.hotItemsTopN(spark, sf0001)
       .select("window_start", "item_id", "rn").as[(Long, Long, Long)].collect().toSet
