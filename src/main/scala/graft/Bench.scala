@@ -25,13 +25,9 @@ object Bench {
       // the driver-local union-find inside it degrading 18 → 715 ms).
       // The brief sleep gives the async cleaner thread a window to drain
       // the reference queue before the next rep starts writing.
-      // SPARK_GRAFT_BENCH_GC=0 disables (for A/B-ing the mechanism).
-      if (gcEachReset) { System.gc(); Thread.sleep(100) }
+      System.gc(); Thread.sleep(100)
     } catch { case e: Throwable => System.err.println(s"[bench] reset: $e") }
   }
-
-  private val gcEachReset: Boolean =
-    !sys.env.get("SPARK_GRAFT_BENCH_GC").map(_.trim).contains("0")
 
   /** Cumulative stop-the-world GC millis of this JVM (all collectors). */
   private def gcMillis(): Long = {
@@ -123,77 +119,7 @@ object Bench {
     // makes such windows directly visible across query boundaries instead
     // of inferred from adjacency.
     val benchT0 = System.nanoTime()
-    // AUDIT-TWIN CADENCE (r13 verdict #6): rrf_overlap_pq exists only to
-    // audit the PERSISTED brute-fusion baseline against the PQ serving
-    // stack — it is the widest plan in the suite BY CONSTRUCTION (both
-    // fusion stacks under one shared rank) and its verdict cannot change
-    // unless the persisted state it audits changes. So it re-times only
-    // when the fingerprint-keyed state root moved (corpus regenerated)
-    // or GRAFT_AUDIT_FORCE=1; otherwise the previous BENCH_LAST value is
-    // carried forward and the line marks it in "audit_cached". Its
-    // CORRECTNESS row is untouched — Verify still runs it every round;
-    // only the redundant re-TIMING is tiered. r15 (r14 verdict #6):
-    // the persist twin joins the tier — it audits the SAME stored
-    // brute-fusion baseline (suite cost #3 at 3.49 s) and its verdict
-    // is equally pinned to the state fingerprint; both audit rows now
-    // re-time only when the state root moves. The per-round
-    // serving-path gate rows remain the live hybrid_rrf_pq family.
-    val auditTwins = Set("rrf_overlap_pq", "rrf_overlap_pq_persist")
-    val stateToken = graft.queries.ClusterState.stateRootToken(sfDir)
-    // r17 (r16 verdict #2): the carried-forward timing was keyed ONLY on
-    // the persisted-state root, so an optimization changing the SERVING
-    // stack under an unchanged state root (exactly what r16's exactRerank
-    // narrowing did) would silently reuse a stale number. The stamp now
-    // also carries the query's canonicalized-plan semantic hash: any plan
-    // change — code or state — forces a re-time. Building the plan runs
-    // query CONSTRUCTION (bounded codebook fits), not the timed reps the
-    // tier exists to skip. A legacy state-token-only stamp never matches
-    // the extended format, so the first r17 bench re-times both twins
-    // (the verdict's requested one-shot refresh) without needing
-    // GRAFT_AUDIT_FORCE.
-    // md5 of the canonicalized plan TEXT, not semanticHash(): the text is
-    // deterministic across JVMs (exprIds normalized, state paths literal),
-    // while semanticHash may fold in process-local object hashes — a
-    // nondeterministic key would force a spurious re-time every run
-    def planHash(name: String): String =
-      try {
-        val txt = SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.optimizedPlan.canonicalized.toString
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .map(b => f"$b%02x").mkString
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] audit plan hash $name: $e"); "plan_err"
-      }
-    val stampNow: Map[String, String] =
-      auditTwins.map(t => t -> s"$stateToken|${planHash(t)}").toMap
-    def readIfExists(p: String): Option[String] =
-      try {
-        val f = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.isRegularFile(f))
-          Some(new String(java.nio.file.Files.readAllBytes(f),
-            java.nio.charset.StandardCharsets.UTF_8))
-        else None
-      } catch { case _: Throwable => None }
-    val stampOf: Map[String, String] = readIfExists("AUDIT_STAMP.json")
-      .map(_.linesIterator.flatMap { l =>
-        l.split("\t", 2) match { case Array(k, v) => Some(k -> v); case _ => None }
-      }.toMap).getOrElse(Map.empty)
-    val lastVal: Map[String, Double] = readIfExists("BENCH_LAST.json")
-      .map { s =>
-        auditTwins.flatMap { t =>
-          ("\"" + java.util.regex.Pattern.quote(t) + "\":([0-9.]+)").r
-            .findFirstMatchIn(s).map(m => t -> m.group(1).toDouble)
-        }.toMap
-      }.getOrElse(Map.empty)
-    val auditForce = sys.env.get("GRAFT_AUDIT_FORCE").map(_.trim).contains("1")
-    val auditCached: Map[String, Double] = auditTwins.flatMap { t =>
-      if (!auditForce && stampOf.get(t).contains(stampNow(t)))
-        lastVal.get(t).filter(_ >= 0).map(t -> _)
-      else None
-    }.toMap
-    val allRuns = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => auditCached.contains(q._1)).map { case (name, fn) =>
+    val allRuns = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // untimed: compiles/loads this query's whole codepath (codegen
       // classes, expression JIT, parquet footers) so rep 1 measures the
       // plan, not the first-touch costs
@@ -230,14 +156,7 @@ object Bench {
     val results = allRuns.map { case (name, times) =>
       val secs = times.map(_._1)
       name -> secs.find(_ < 0).getOrElse(secs.sorted.apply(secs.length / 2))
-    }.toMap ++ auditCached
-    // stamp the state token for every audit twin now in sync (just timed,
-    // or carried forward against an unchanged root)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("AUDIT_STAMP.json"),
-      auditTwins.toSeq.sorted.map(t => s"$t\t${stampNow(t)}\n").mkString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"[bench] stamp: $e") }
+    }.toMap
     val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
     // millisecond precision keeps the artifact line short: the round-3
     // capture lost 11 of 78 per-query times because the full-precision
@@ -249,10 +168,8 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val cachedJson = auditCached.keys.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"warmups":$warmups,"queries":$qs,"failed":$failedJson,"audit_cached":$cachedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"warmups":$warmups,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     // durable copies first: even if the stdout tail is clipped again, the
     // full metrics object survives as a whole file in the repo; the
     // per-rep detail (for variance audits) goes to its own file so the

@@ -1,10 +1,10 @@
 package graft.cep
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.util.LongAccumulator
 
 import graft.streaming.Detectors.KeyedEvent
+import graft.streaming.EventTimeBuffer
 
 /**
  * Composable cep-lite: sequential multi-stage patterns over keyed
@@ -29,9 +29,8 @@ import graft.streaming.Detectors.KeyedEvent
  * [[detectWithMetrics]]). Batch mode runs CAP-FREE: its output is compared
  * exactly against the DuckDB oracle, so it must not diverge from the
  * no-skip semantics under any input. Partials also expire at the
- * within-horizon. Events fold in event-time order; the streaming mode
- * reuses the watermark-buffer + late-drop discipline of
- * graft.streaming.Detectors.
+ * within-horizon. Events fold in event-time order through
+ * [[graft.streaming.EventTimeBuffer]], like graft.streaming.Detectors.
  */
 object PatternDetector extends Serializable {
 
@@ -104,8 +103,8 @@ object PatternDetector extends Serializable {
   }
 
   /** Run the pattern over a keyed event Dataset. Batch mode folds each key
-    * once; streaming mode buffers to the watermark with late-drop and
-    * wakes on EventTimeTimeout, exactly like graft.streaming.Detectors. */
+    * once; streaming mode buffers to the watermark with late-drop
+    * ([[graft.streaming.EventTimeBuffer]]). */
   def detect(events: Dataset[KeyedEvent], spec: PatternSpec,
              streaming: Boolean): Dataset[PatternMatch] =
     detectWithMetrics(events, spec, streaming)._1
@@ -121,44 +120,23 @@ object PatternDetector extends Serializable {
     * `stateOperators` metrics from the StreamingQuery progress instead. */
   def detectWithMetrics(events: Dataset[KeyedEvent], spec: PatternSpec,
                         streaming: Boolean): (Dataset[PatternMatch], LongAccumulator) = {
-    implicit val outEnc = Encoders.product[PatternMatch]
-    implicit val stEnc = Encoders.product[PatternState]
     implicit val keyEnc = Encoders.scalaLong
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
     val effSpec = if (streaming) spec else spec.copy(maxPartials = Int.MaxValue)
     val dropped = events.sparkSession.sparkContext
       .longAccumulator("graft.pattern.partials_dropped")
 
-    def process(key: Long, it: Iterator[KeyedEvent],
-                state: GroupState[PatternState]): Iterator[PatternMatch] = {
-      val st = state.getOption.getOrElse(PatternState(Nil, Nil))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.tsSec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.tsSec, e.id))
-      val (ready, rest) = all.partition(_.tsSec < wmSec)
+    val matches = EventTimeBuffer.drain(events, streaming, PatternState(Nil, Nil))(
+      _.key, _.pending, _.tsSec, _.id) { (key, st, ready, rest, wmSec) =>
       val init = st.partials.map(t => Partial(t._1, t._2, t._3, t._4, t._5, t._6))
-      val (matches, folded) = fold(effSpec, ready, key, init, dropped)
+      val (found, folded) = fold(effSpec, ready, key, init, dropped)
       // a partial older than the within-horizon behind the watermark can
-      // never complete — prune, and drop the state row once fully drained
+      // never complete — prune, and drop the state row once fully drained;
+      // wake at partial-match expiry, so quiet keys are re-invoked to prune
       val partials = folded.filter(p => wmSec - p.firstTs <= effSpec.withinSec)
-      if (rest.isEmpty && partials.isEmpty) state.remove()
-      else {
-        state.update(PatternState(rest,
-          partials.map(p => (p.stage, p.inStage, p.firstTs, p.firstId, p.nEvents, p.begun))))
-        if (streaming) {
-          // wake for buffered events AND for partial-match expiry, so quiet
-          // keys are re-invoked to prune and eventually remove their state
-          val wake = (rest.map(_.tsSec) ++
-            partials.map(_.firstTs + effSpec.withinSec)).reduceOption(_ min _)
-          wake.foreach(w => state.setTimeoutTimestamp(
-            math.max(w * 1000 + 1000, state.getCurrentWatermarkMs() + 1)))
-        }
-      }
-      matches.iterator
+      EventTimeBuffer.Step(PatternState(rest,
+          partials.map(p => (p.stage, p.inStage, p.firstTs, p.firstId, p.nEvents, p.begun))),
+        found, partials.nonEmpty, partials.map(_.firstTs + effSpec.withinSec))
     }
-
-    (events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process), dropped)
+    (matches, dropped)
   }
 }

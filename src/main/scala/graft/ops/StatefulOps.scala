@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
  * Batch semantics are a rank-per-(key, day) — fully declarative, one
  * shuffle, codegen'd. The day boundary is the event-time day (the
  * reference's processing-time midnight timer is re-specified as event-time
- * per SURVEY.md §7.4-4). The streaming twin lives in
- * graft.streaming.BlacklistDetector (flatMapGroupsWithState).
+ * per SURVEY.md §7.4-4). The streaming twin is
+ * [[graft.streaming.Detectors.blacklist]] (flatMapGroupsWithState).
  */
 object StatefulOps {
 

@@ -63,12 +63,6 @@ object ClusterState {
   /** Process-local fast path: state roots already verified on disk. */
   private val ready = scala.collection.mutable.Set[String]()
 
-  /** The fingerprint-keyed state root as a stable string — the staleness
-    * token [[graft.Bench]]'s audit-twin cadence stamps (a changed corpus
-    * changes the root, forcing the audit to re-time). */
-  private[graft] def stateRootToken(dir: String): String =
-    stateRoot(dir).getAbsolutePath
-
   private[queries] def stateRoot(dir: String): File = {
     // BOTH corpora fingerprint the root: the dense store
     // ([[IndexState.denseStorePaths]]) derives from embeddings.parquet,

@@ -1,30 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.streaming.EventTimeBuffer.{drain, Step}
 
 /**
  * Streaming twins of the batch detectors (graft.cep.Cep, graft.ops.JoinOps
  * .followedByWithin, graft.ops.StatefulOps): per-key state machines inside
  * `flatMapGroupsWithState`, the Spark mapping of the reference's
- * `KeyedProcessFunction`/CEP NFA state (SURVEY.md §2.8, §7.4-1).
- *
- * Out-of-order handling: Flink's CEP consumes events in watermark order; a
- * micro-batch sees arrival order. Each detector therefore buffers incoming
- * events in state and only folds those older than the current watermark
- * through its state machine, in (ts, id) order — identical event-time
- * semantics, bounded state (the buffer never holds more than the watermark
- * horizon). An `EventTimeTimeout` wakes the key to drain the buffer when
- * the watermark advances past buffered events without new arrivals.
- *
- * In batch mode (`streaming = false`) the same fold runs over all events at
- * once (watermark = ∞), which is exactly the batch lag/join formulation —
- * the property the parity specs assert.
+ * `KeyedProcessFunction`/CEP NFA state (SURVEY.md §2.8, §7.4-1). All but
+ * [[volumeAnomaly]] and [[itemPairIncrements]] fold their events through
+ * [[EventTimeBuffer]].
  */
 object Detectors {
 
+  private implicit val longKey: Encoder[Long] = Encoders.scalaLong
+
   /** Generic keyed event: `hit` marks pattern-relevant events (e.g. login
-    * failure); `isA` distinguishes streams for two-stream detectors. */
+    * failure); in two-stream detectors it also tells the streams apart
+    * (create vs pay). */
   case class KeyedEvent(key: Long, tsSec: Long, id: Long, hit: Boolean)
 
   case class RunMatch(key: Long, first_id: Long, last_id: Long,
@@ -35,21 +30,9 @@ object Detectors {
 
   /** times(n).consecutive().within(d) — streaming CEP-lite. */
   def consecutive(events: Dataset[KeyedEvent], n: Int, withinSec: Long,
-                  streaming: Boolean): Dataset[RunMatch] = {
-    implicit val outEnc = Encoders.product[RunMatch]
-    implicit val stEnc = Encoders.product[RunState]
-    implicit val keyEnc = Encoders.scalaLong
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: Long, it: Iterator[KeyedEvent],
-                state: GroupState[RunState]): Iterator[RunMatch] = {
-      val st = state.getOption.getOrElse(RunState(Nil, Nil))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      // events older than the watermark are late: dropped, as Flink CEP does
-      val fresh = it.filter(e => !streaming || e.tsSec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.tsSec, e.id))
-      val (ready, rest) = all.partition(_.tsSec < wmSec)
+                  streaming: Boolean): Dataset[RunMatch] =
+    drain(events, streaming, RunState(Nil, Nil))(
+      _.key, _.pending, _.tsSec, _.id) { (key, st, ready, rest, wmSec) =>
       var run = st.run
       val out = Seq.newBuilder[RunMatch]
       ready.foreach { e =>
@@ -67,25 +50,11 @@ object Detectors {
       // window constraint of any future event — prune it so a key that goes
       // quiet doesn't pin a state-store row forever
       val liveRun = run.filter { case (ts, _) => ts + withinSec >= wmSec }
-      if (rest.isEmpty && liveRun.isEmpty) state.remove()
-      else {
-        state.update(RunState(rest, liveRun))
-        if (streaming) {
-          // wake for buffered events AND for run-tail expiry: without the
-          // second term a key that goes quiet is never re-invoked and its
-          // state row would be pinned forever
-          val wake = (rest.map(_.tsSec) ++ liveRun.map(_._1 + withinSec))
-            .reduceOption(_ min _)
-          wake.foreach(w => state.setTimeoutTimestamp(
-            math.max(w * 1000 + 1000, state.getCurrentWatermarkMs() + 1)))
-        }
-      }
-      out.result().iterator
+      // wake for run-tail expiry too: without it a key that goes quiet is
+      // never re-invoked and its state row would be pinned forever
+      Step(RunState(rest, liveRun), out.result(), liveRun.nonEmpty,
+        liveRun.map(_._1 + withinSec))
     }
-
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
-  }
 
   case class FollowResult(key: Long, a_id: Long, a_ts: Long, status: String)
 
@@ -98,20 +67,9 @@ object Detectors {
     * passes (next processed event or watermark) times out. */
   def followedBy(events: Dataset[KeyedEvent], withinSec: Long,
                  matchedTag: String, timeoutTag: String,
-                 streaming: Boolean): Dataset[FollowResult] = {
-    implicit val outEnc = Encoders.product[FollowResult]
-    implicit val stEnc = Encoders.product[FollowState]
-    implicit val keyEnc = Encoders.scalaLong
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: Long, it: Iterator[KeyedEvent],
-                state: GroupState[FollowState]): Iterator[FollowResult] = {
-      val st = state.getOption.getOrElse(FollowState(Nil, Nil))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.tsSec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.tsSec, e.id))
-      val (ready, rest) = all.partition(_.tsSec < wmSec)
+                 streaming: Boolean): Dataset[FollowResult] =
+    drain(events, streaming, FollowState(Nil, Nil))(
+      _.key, _.pending, _.tsSec, _.id) { (key, st, ready, rest, wmSec) =>
       var open = st.openA
       val out = Seq.newBuilder[FollowResult]
       def expire(now: Long): Unit = {
@@ -130,21 +88,9 @@ object Detectors {
         }
       }
       expire(wmSec) // watermark-driven timeouts with no newer event
-      if (rest.isEmpty && open.isEmpty) state.remove()
-      else {
-        state.update(FollowState(rest, open))
-        if (streaming) {
-          val wake = (rest.map(_.tsSec) ++ open.map(_._1 + withinSec)).reduceOption(_ min _)
-          wake.foreach(w => state.setTimeoutTimestamp(
-            math.max(w * 1000 + 1000, state.getCurrentWatermarkMs() + 1)))
-        }
-      }
-      out.result().iterator
+      Step(FollowState(rest, open), out.result(), open.nonEmpty,
+        open.map(_._1 + withinSec))
     }
-
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
-  }
 
   case class FullResult(key: Long, a_id: Long, a_ts: Long, b_id: Long,
                         b_ts: Long, status: String)
@@ -165,20 +111,9 @@ object Detectors {
     * exactly like the reference's arrival-tolerant 2.1.2 branch. */
   def followedByFull(events: Dataset[KeyedEvent], withinSec: Long,
                      matchedTag: String, lateTag: String, orphanTag: String,
-                     timeoutTag: String, streaming: Boolean): Dataset[FullResult] = {
-    implicit val outEnc = Encoders.product[FullResult]
-    implicit val stEnc = Encoders.product[FullFollowState]
-    implicit val keyEnc = Encoders.scalaLong
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: Long, it: Iterator[KeyedEvent],
-                state: GroupState[FullFollowState]): Iterator[FullResult] = {
-      val st = state.getOption.getOrElse(FullFollowState(Nil, -1L, -1L, -1L, -1L))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.tsSec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.tsSec, e.id))
-      val (ready, rest) = all.partition(_.tsSec < wmSec)
+                     timeoutTag: String, streaming: Boolean): Dataset[FullResult] =
+    drain(events, streaming, FullFollowState(Nil, -1L, -1L, -1L, -1L))(
+      _.key, _.pending, _.tsSec, _.id) { (key, st, ready, rest, wmSec) =>
       var (aTs, aId, bTs, bId) = (st.aTs, st.aId, st.bTs, st.bId)
       val out = Seq.newBuilder[FullResult]
       ready.foreach { e =>
@@ -208,23 +143,10 @@ object Detectors {
         out += FullResult(key, aId, aTs, -1L, -1L, timeoutTag)
         aTs = -1L; aId = -1L
       }
-      if (rest.isEmpty && aTs < 0 && bTs < 0) state.remove()
-      else {
-        state.update(FullFollowState(rest, aTs, aId, bTs, bId))
-        if (streaming) {
-          val wake = (rest.map(_.tsSec) ++
-            (if (aTs >= 0) Seq(aTs + withinSec) else Nil) ++
-            (if (bTs >= 0) Seq(bTs) else Nil)).reduceOption(_ min _)
-          wake.foreach(w => state.setTimeoutTimestamp(
-            math.max(w * 1000 + 1000, state.getCurrentWatermarkMs() + 1)))
-        }
-      }
-      out.result().iterator
+      Step(FullFollowState(rest, aTs, aId, bTs, bId), out.result(),
+        aTs >= 0 || bTs >= 0,
+        (if (aTs >= 0) Seq(aTs + withinSec) else Nil) ++ (if (bTs >= 0) Seq(bTs) else Nil))
     }
-
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
-  }
 
   case class BlEvent(user: Long, ad: Long, tsSec: Long, id: Long)
   case class BlOut(tag: String, event_id: Long, user_id: Long, ad_id: Long,
@@ -237,19 +159,9 @@ object Detectors {
     * time, SURVEY.md §7.4-4). */
   def blacklist(events: Dataset[BlEvent], threshold: Int,
                 streaming: Boolean): Dataset[BlOut] = {
-    implicit val outEnc = Encoders.product[BlOut]
-    implicit val stEnc = Encoders.product[BlState]
     implicit val keyEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: (Long, Long), it: Iterator[BlEvent],
-                state: GroupState[BlState]): Iterator[BlOut] = {
-      val st = state.getOption.getOrElse(BlState(Nil, -1L, 0L, warned = false))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.tsSec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.tsSec, e.id))
-      val (ready, rest) = all.partition(_.tsSec < wmSec)
+    drain(events, streaming, BlState(Nil, -1L, 0L, warned = false))(
+      e => (e.user, e.ad), _.pending, _.tsSec, _.id) { (_, st, ready, rest, wmSec) =>
       var (day, cnt, warned) = (st.dayStart, st.cnt, st.warned)
       val out = Seq.newBuilder[BlOut]
       ready.foreach { e =>
@@ -264,25 +176,11 @@ object Detectors {
         }
       }
       // the per-day counter is dead once the watermark passes end-of-day:
-      // drop the row instead of keeping every (user, ad) pair ever seen
-      if (rest.isEmpty && day + 86400 <= wmSec) state.remove()
-      else {
-        state.update(BlState(rest, day, cnt, warned))
-        if (streaming) {
-          // wake at the buffered events or at end-of-day, whichever first —
-          // the end-of-day timer is what re-invokes a quiet key so the
-          // removal branch above can actually fire
-          val wake = (rest.map(_.tsSec) ++
-            (if (day >= 0) Seq(day + 86400) else Nil)).reduceOption(_ min _)
-          wake.foreach(w => state.setTimeoutTimestamp(
-            math.max(w * 1000 + 1000, state.getCurrentWatermarkMs() + 1)))
-        }
-      }
-      out.result().iterator
+      // drop the row instead of keeping every (user, ad) pair ever seen. The
+      // end-of-day timer is what re-invokes a quiet key so that can happen.
+      Step(BlState(rest, day, cnt, warned), out.result(), day + 86400 > wmSec,
+        if (day >= 0) Seq(day + 86400) else Nil)
     }
-
-    events.groupByKey(e => (e.user, e.ad))
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
   }
 
   /** J1 TxPayMatch reconciliation, timer-exact: pay waits `payWaitSec` for
@@ -296,21 +194,9 @@ object Detectors {
                      receipts: Seq[(Long, Long)])
 
   def reconcile(events: Dataset[TxEvent], payWaitSec: Long, receiptWaitSec: Long,
-                streaming: Boolean): Dataset[TxOut] = {
-    implicit val outEnc = Encoders.product[TxOut]
-    implicit val stEnc = Encoders.product[TxState]
-    implicit val keyEnc = Encoders.scalaLong
-
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: Long, it: Iterator[TxEvent],
-                state: GroupState[TxState]): Iterator[TxOut] = {
-      val st = state.getOption.getOrElse(TxState(Nil, Nil, Nil))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.tsSec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.tsSec, e.id))
-      val (ready, rest) = all.partition(_.tsSec < wmSec)
+                streaming: Boolean): Dataset[TxOut] =
+    drain(events, streaming, TxState(Nil, Nil, Nil))(
+      _.key, _.pending, _.tsSec, _.id) { (key, st, ready, rest, wmSec) =>
       var pays = st.pays; var receipts = st.receipts
       val out = Seq.newBuilder[TxOut]
       def expire(now: Long): Unit = {
@@ -340,22 +226,10 @@ object Detectors {
         }
       }
       expire(wmSec)
-      if (rest.isEmpty && pays.isEmpty && receipts.isEmpty) state.remove()
-      else {
-        state.update(TxState(rest, pays, receipts))
-        if (streaming) {
-          val wake = (rest.map(_.tsSec) ++ pays.map(_._1 + payWaitSec) ++
-            receipts.map(_._1 + receiptWaitSec)).reduceOption(_ min _)
-          wake.foreach(w => state.setTimeoutTimestamp(
-            math.max(w * 1000 + 1000, state.getCurrentWatermarkMs() + 1)))
-        }
-      }
-      out.result().iterator
+      Step(TxState(rest, pays, receipts), out.result(),
+        pays.nonEmpty || receipts.nonEmpty,
+        pays.map(_._1 + payWaitSec) ++ receipts.map(_._1 + receiptWaitSec))
     }
-
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
-  }
 
   /** Typed event for type-keyed hourly monitoring; bind with `.as` by name
     * so the watermarked ts column rides along (see loginFailAlarms). */
@@ -444,9 +318,9 @@ object Detectors {
   /** Streaming twin of BehaviorQueries.funnelSteps: per user, the first
     * view, the first click strictly after it, the first purchase strictly
     * after that. Events drain through the state machine in event-time order
-    * once the watermark closes them (same buffer discipline as
-    * [[consecutive]]), so each step is set exactly once — the in-order
-    * first click after the global-min view IS the min click after it. A
+    * once the watermark closes them ([[EventTimeBuffer]]), so each step is
+    * set exactly once — the in-order first click after the global-min view
+    * IS the min click after it. A
     * row is (re-)emitted whenever a step advances; the LAST row per user
     * equals the batch query's row.
     *
@@ -455,20 +329,9 @@ object Detectors {
     * must not restart the machine). A 100 TB deployment bounds it by
     * windowing the funnel (cohort month, campaign window) so keys expire
     * with their horizon. */
-  def funnel(events: Dataset[StepEvent], streaming: Boolean): Dataset[FunnelRow] = {
-    implicit val outEnc = Encoders.product[FunnelRow]
-    implicit val stEnc = Encoders.product[FunnelState]
-    implicit val keyEnc = Encoders.scalaLong
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: Long, it: Iterator[StepEvent],
-                state: GroupState[FunnelState]): Iterator[FunnelRow] = {
-      val st = state.getOption.getOrElse(FunnelState(Nil, -1L, -1L, -1L))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.sec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.sec, e.id))
-      val (ready, rest) = all.partition(_.sec < wmSec)
+  def funnel(events: Dataset[StepEvent], streaming: Boolean): Dataset[FunnelRow] =
+    drain(events, streaming, FunnelState(Nil, -1L, -1L, -1L))(
+      _.key, _.pending, _.sec, _.id) { (key, st, ready, rest, _) =>
       var (view, click, purchase) = (st.view, st.click, st.purchase)
       var changed = false
       ready.foreach { e =>
@@ -482,19 +345,13 @@ object Detectors {
           case _ =>
         }
       }
-      state.update(FunnelState(rest, view, click, purchase))
-      if (streaming && rest.nonEmpty)
-        state.setTimeoutTimestamp(math.max(
-          rest.map(_.sec).min * 1000 + 1000, state.getCurrentWatermarkMs() + 1))
-      if (changed) {
-        val depth = if (purchase >= 0) 3L else if (click >= 0) 2L else 1L
-        Iterator.single(FunnelRow(key, view, click, purchase, depth))
-      } else Iterator.empty
+      val out =
+        if (changed) {
+          val depth = if (purchase >= 0) 3L else if (click >= 0) 2L else 1L
+          Iterator.single(FunnelRow(key, view, click, purchase, depth))
+        } else Iterator.empty
+      Step(FunnelState(rest, view, click, purchase), out, live = true)
     }
-
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
-  }
 
   /** Bare typed event for the transition fold. */
   case class SeqTypeEvent(key: Long, etype: String, sec: Long, id: Long)
@@ -509,7 +366,7 @@ object Detectors {
   /** Streaming twin of BehaviorQueries.eventTransitions, one level down:
     * emits one (user, from, to) increment per consecutive event pair as
     * the watermark finalizes each event, draining the in-horizon buffer
-    * in event-time order (the [[funnel]] discipline) so the pair
+    * in event-time order ([[EventTimeBuffer]]) so the pair
     * sequence equals the batch lead-window's. Counting the increments
     * reproduces the batch cell frame exactly.
     *
@@ -529,45 +386,26 @@ object Detectors {
     * spec-pinned either way). */
   def transitionIncrements(events: Dataset[SeqTypeEvent],
                            streaming: Boolean,
-                           idleTtlSec: Option[Long] = None): Dataset[TransInc] = {
-    implicit val outEnc = Encoders.product[TransInc]
-    implicit val stEnc = Encoders.product[TransState]
-    implicit val keyEnc = Encoders.scalaLong
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: Long, it: Iterator[SeqTypeEvent],
-                state: GroupState[TransState]): Iterator[TransInc] = {
-      val st = state.getOption.getOrElse(TransState(Nil, ""))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.sec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.sec, e.id))
-      val (ready, rest) = all.partition(_.sec < wmSec)
-      // idle-TTL expiry: the buffer is empty and no fresh events arrived
-      // — drop the carry entirely (the accepted one-lost-transition cost)
-      if (state.hasTimedOut && all.isEmpty) {
-        state.remove()
-        return Iterator.empty
-      }
+                           idleTtlSec: Option[Long] = None): Dataset[TransInc] =
+    // idle-TTL expiry drops the carry entirely (the accepted
+    // one-lost-transition cost)
+    drain(events, streaming, TransState(Nil, ""))(
+      _.key, _.pending, _.sec, _.id,
+      idle = idleTtl(idleTtlSec)) {
+      (key, st, ready, rest, _) =>
       var last = st.last
       val out = scala.collection.mutable.ArrayBuffer[TransInc]()
       ready.foreach { e =>
         if (last.nonEmpty) out += TransInc(key, last, e.etype)
         last = e.etype
       }
-      state.update(TransState(rest, last))
-      if (streaming && rest.nonEmpty)
-        state.setTimeoutTimestamp(math.max(
-          rest.map(_.sec).min * 1000 + 1000, state.getCurrentWatermarkMs() + 1))
-      else if (streaming && idleTtlSec.isDefined)
-        state.setTimeoutTimestamp(
-          state.getCurrentWatermarkMs() + idleTtlSec.get * 1000)
-      out.iterator
+      Step(TransState(rest, last), out, live = true)
     }
 
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
-  }
+  /** The idle timer of the transition carries: `ttlSec` past the watermark
+    * once a user's buffer drains; none keeps the carry forever. */
+  private def idleTtl(ttlSec: Option[Long]): Option[(Long, Long) => Option[Long]] =
+    Some((_, wmMs) => ttlSec.map(wmMs + _ * 1000))
 
   /** One observed consecutive-TRIPLE increment; the trigram path frame
     * is `groupBy(from_type, mid_type, to_type).count()` over the append
@@ -592,24 +430,11 @@ object Detectors {
     * documented on [[transitionIncrements]]. */
   def pathIncrements(events: Dataset[SeqTypeEvent],
                      streaming: Boolean,
-                     idleTtlSec: Option[Long] = None): Dataset[PathInc] = {
-    implicit val outEnc = Encoders.product[PathInc]
-    implicit val stEnc = Encoders.product[PathState]
-    implicit val keyEnc = Encoders.scalaLong
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: Long, it: Iterator[SeqTypeEvent],
-                state: GroupState[PathState]): Iterator[PathInc] = {
-      val st = state.getOption.getOrElse(PathState(Nil, "", ""))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.sec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.sec, e.id))
-      val (ready, rest) = all.partition(_.sec < wmSec)
-      if (state.hasTimedOut && all.isEmpty) {
-        state.remove()
-        return Iterator.empty
-      }
+                     idleTtlSec: Option[Long] = None): Dataset[PathInc] =
+    drain(events, streaming, PathState(Nil, "", ""))(
+      _.key, _.pending, _.sec, _.id,
+      idle = idleTtl(idleTtlSec)) {
+      (key, st, ready, rest, _) =>
       var (last2, last1) = (st.last2, st.last1)
       val out = scala.collection.mutable.ArrayBuffer[PathInc]()
       ready.foreach { e =>
@@ -617,19 +442,8 @@ object Detectors {
         last2 = last1
         last1 = e.etype
       }
-      state.update(PathState(rest, last2, last1))
-      if (streaming && rest.nonEmpty)
-        state.setTimeoutTimestamp(math.max(
-          rest.map(_.sec).min * 1000 + 1000, state.getCurrentWatermarkMs() + 1))
-      else if (streaming && idleTtlSec.isDefined)
-        state.setTimeoutTimestamp(
-          state.getCurrentWatermarkMs() + idleTtlSec.get * 1000)
-      out.iterator
+      Step(PathState(rest, last2, last1), out, live = true)
     }
-
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
-  }
 
   /** One transition increment with its frozen-model surprisal. */
   case class PathScore(user_id: Long, from_type: String, mid_type: String,
@@ -686,20 +500,10 @@ object Detectors {
     * O(watermark horizon / week), not O(lifetime). */
   def retentionCells(events: Dataset[WeekEvent],
                      streaming: Boolean): Dataset[RetentionCell] = {
-    implicit val outEnc = Encoders.product[RetentionCell]
-    implicit val stEnc = Encoders.product[RetentionState]
-    implicit val keyEnc = Encoders.scalaLong
     val weekSec = 7L * 86400L
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: Long, it: Iterator[WeekEvent],
-                state: GroupState[RetentionState]): Iterator[RetentionCell] = {
-      val st = state.getOption.getOrElse(RetentionState(Nil, -1L, Nil))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.sec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(_.sec)
-      val (ready, rest) = all.partition(_.sec < wmSec)
+    // no id: events of one second keep their arrival order
+    drain(events, streaming, RetentionState(Nil, -1L, Nil))(
+      _.key, _.pending, _.sec, _ => 0L) { (key, st, ready, rest, wmSec) =>
       var cohort = st.cohort
       var seen = st.seen.toSet
       val out = Seq.newBuilder[RetentionCell]
@@ -713,15 +517,8 @@ object Detectors {
       }
       // weeks whose end the watermark has passed cannot recur
       val liveSeen = seen.filter(w => (w + 1) * weekSec > wmSec).toSeq.sorted
-      state.update(RetentionState(rest, cohort, liveSeen))
-      if (streaming && rest.nonEmpty)
-        state.setTimeoutTimestamp(math.max(
-          rest.map(_.sec).min * 1000 + 1000, state.getCurrentWatermarkMs() + 1))
-      out.result().iterator
+      Step(RetentionState(rest, cohort, liveSeen), out.result(), live = true)
     }
-
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
   }
 
   /** (user, item) interaction for basket co-occurrence. */
@@ -746,7 +543,6 @@ object Detectors {
                          streaming: Boolean): Dataset[PairInc] = {
     implicit val outEnc = Encoders.product[PairInc]
     implicit val stEnc = Encoders.product[BasketState]
-    implicit val keyEnc = Encoders.scalaLong
 
     def process(key: Long, it: Iterator[ItemEvent],
                 state: GroupState[BasketState]): Iterator[PairInc] = {
@@ -788,8 +584,8 @@ object Detectors {
     * keep/drop decision (`PipelineQueries.dedupExact` keeps one doc per
     * content hash): keyed by hash, the first document in event-time
     * (sec, doc_id) order keeps, all later ones drop with `dup_of` = the
-    * keeper. Events drain through the watermark-ordered buffer (same
-    * discipline as [[funnel]]), so the decision is exact under bounded
+    * keeper. Events drain through the watermark-ordered buffer
+    * ([[EventTimeBuffer]]), so the decision is exact under bounded
     * disorder — a late-but-in-horizon earlier document still wins — and
     * each decision is emitted exactly once (Append mode), which is what an
     * ingest pipeline acts on (write the keeper, skip the dup).
@@ -816,26 +612,22 @@ object Detectors {
     * failure is diagnosable. */
   def onlineDedup(events: Dataset[DocEvent], streaming: Boolean,
                   epochSec: Option[Long] = None): Dataset[DedupDecision] = {
-    implicit val outEnc = Encoders.product[DedupDecision]
-    implicit val stEnc = Encoders.product[DedupState]
     implicit val keyEnc = Encoders.STRING
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
-    def process(key: String, it: Iterator[DocEvent],
-                state: GroupState[DedupState]): Iterator[DedupDecision] = {
-      val st = state.getOption.getOrElse(DedupState(Nil, -1L))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.sec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.sec, e.doc_id))
-      // epoch expiry: buffer drained, watermark past the epoch end — the
-      // keeper dies with its snapshot (only reachable in epoch mode; the
-      // all-time mode arms timeouts only while a buffer is pending)
-      if (state.hasTimedOut && all.isEmpty) {
-        state.remove()
-        return Iterator.empty
-      }
-      val (ready, rest) = all.partition(_.sec < wmSec)
+    val key: DocEvent => String = epochSec match {
+      // '#' cannot occur in a content hash, so the composite key is
+      // unambiguous; decisions still carry the bare hash (e.h)
+      case Some(es) => e => s"${e.h}#${e.sec / es}"
+      case None => _.h
+    }
+    // epoch expiry: once the buffer drains, a death timer at the epoch
+    // boundary (clamped above the watermark — Spark rejects timestamps at
+    // or below it); the keeper dies with its snapshot
+    def epochEnd(key: String, wmMs: Long): Option[Long] = epochSec.map { es =>
+      val epochIdx = key.substring(key.lastIndexOf('#') + 1).toLong
+      math.max((epochIdx + 1) * es * 1000, wmMs + 1)
+    }
+    drain(events, streaming, DedupState(Nil, -1L))(
+      key, _.pending, _.sec, _.doc_id, idle = Some(epochEnd _)) { (_, st, ready, rest, _) =>
       var keeper = st.keeper
       val out = Seq.newBuilder[DedupDecision]
       ready.foreach { e =>
@@ -846,28 +638,8 @@ object Detectors {
           out += DedupDecision(e.doc_id, e.h, keep = false, keeper)
         }
       }
-      state.update(DedupState(rest, keeper))
-      if (streaming && rest.nonEmpty)
-        state.setTimeoutTimestamp(math.max(
-          rest.map(_.sec).min * 1000 + 1000, state.getCurrentWatermarkMs() + 1))
-      else if (streaming && epochSec.isDefined) {
-        // arm the death timer at the epoch boundary (clamped above the
-        // watermark — Spark rejects timestamps at or below it)
-        val epochIdx = key.substring(key.lastIndexOf('#') + 1).toLong
-        state.setTimeoutTimestamp(math.max(
-          (epochIdx + 1) * epochSec.get * 1000,
-          state.getCurrentWatermarkMs() + 1))
-      }
-      out.result().iterator
+      Step(DedupState(rest, keeper), out.result(), live = true)
     }
-
-    val keyed = epochSec match {
-      // '#' cannot occur in a content hash, so the composite key is
-      // unambiguous; decisions still carry the bare hash (e.h)
-      case Some(es) => events.groupByKey(e => s"${e.h}#${e.sec / es}")
-      case None => events.groupByKey(_.h)
-    }
-    keyed.flatMapGroupsWithState(OutputMode.Append, timeout)(process)
   }
 
   /** One embedding on the ingest feed, already coarse-assigned (cid =
@@ -887,8 +659,9 @@ object Detectors {
     * membership with the SAME arithmetic as the batch expression (exact
     * integer dot, then one double division over two double sqrts — IEEE
     * ops in the same order, so decisions are bit-identical). Events buffer
-    * until the watermark passes and process in (sec, vec_id) order, so
-    * replay order cannot change a decision. State is bounded by cluster
+    * until the watermark passes and process in (sec, vec_id) order
+    * ([[EventTimeBuffer]]), so replay order cannot change a decision.
+    * State is bounded by cluster
     * membership — the quantity SemDeDup's k-grows-with-corpus centroid
     * sizing keeps constant by DESIGN; `maxMembers` is the opt-in HARD
     * bound for deployments that cannot re-train centroids on schedule
@@ -908,12 +681,6 @@ object Detectors {
   def onlineSemDedup(events: Dataset[VecEvent], threshold: Double,
                      streaming: Boolean,
                      maxMembers: Option[Int] = None): Dataset[SemDecision] = {
-    implicit val outEnc = Encoders.product[SemDecision]
-    implicit val stEnc = Encoders.product[SemState]
-    implicit val keyEnc = Encoders.scalaLong
-    val timeout =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-
     def cos(a: VecEvent, b: VecEvent): Double = {
       var dot = 0L
       var i = 0
@@ -921,13 +688,8 @@ object Detectors {
       dot.toDouble / (math.sqrt(a.norm2.toDouble) * math.sqrt(b.norm2.toDouble))
     }
 
-    def process(key: Long, it: Iterator[VecEvent],
-                state: GroupState[SemState]): Iterator[SemDecision] = {
-      val st = state.getOption.getOrElse(SemState(Nil, Nil, 0L))
-      val wmSec = if (streaming) state.getCurrentWatermarkMs() / 1000 else Long.MaxValue
-      val fresh = it.filter(e => !streaming || e.sec >= wmSec)
-      val all = (st.pending ++ fresh).sortBy(e => (e.sec, e.vec_id))
-      val (ready, rest) = all.partition(_.sec < wmSec)
+    drain(events, streaming, SemState(Nil, Nil, 0L))(
+      _.cid, _.pending, _.sec, _.vec_id) { (key, st, ready, rest, _) =>
       var members = st.members
       var overflow = st.overflow
       val out = Seq.newBuilder[SemDecision]
@@ -937,14 +699,7 @@ object Detectors {
         if (maxMembers.forall(members.length < _)) members = members :+ e
         else overflow += 1L
       }
-      state.update(SemState(rest, members, overflow))
-      if (streaming && rest.nonEmpty)
-        state.setTimeoutTimestamp(math.max(
-          rest.map(_.sec).min * 1000 + 1000, state.getCurrentWatermarkMs() + 1))
-      out.result().iterator
+      Step(SemState(rest, members, overflow), out.result(), live = true)
     }
-
-    events.groupByKey(_.cid)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(process)
   }
 }

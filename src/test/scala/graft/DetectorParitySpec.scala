@@ -1,10 +1,14 @@
 package graft
 
+import scala.reflect.runtime.universe.TypeTag
 import scala.util.Random
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.cep.PatternDetector
+import graft.cep.PatternDetector.{PatternSpec, Stage}
 import graft.ops.{JoinOps, StatefulOps}
 import graft.streaming.Detectors
 import graft.streaming.Detectors._
@@ -135,25 +139,74 @@ class DetectorParitySpec extends SparkSpec {
     assert(gotWarn.nonEmpty)
   }
 
-  test("consecutive detector removes state rows for keys that go quiet") {
-    val input = MemoryStream[KeyedEvent](21, spark, None)
+  /** Feed one event for a quiet key, then a far-future sentinel key that
+    * carries the watermark past every deadline (and past end of day), then
+    * one more trigger so the quiet key's timer fires with no new data. */
+  private def quietKeyDropsState[E <: Product : TypeTag](name: String, quiet: E,
+      sentinel: Long => E)(detector: Dataset[E] => Dataset[_]): Unit =
+    test(s"$name detector removes state rows for keys that go quiet") {
+      val input = MemoryStream[E](21, spark, None)
+      val withWm = input.toDS()
+        .withColumn("ts", timestamp_seconds(col("tsSec")))
+        .withWatermark("ts", "60 seconds")
+        .as[E]
+      val q = detector(withWm)
+        .writeStream.format("memory").queryName(s"quiet_$name").outputMode("append").start()
+      try {
+        input.addData(quiet)
+        q.processAllAvailable()
+        input.addData(sentinel(100000L))
+        q.processAllAvailable()
+        input.addData(sentinel(100001L))
+        q.processAllAvailable()
+        // only the sentinel key's buffered events remain as state
+        assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 1L)
+      } finally q.stop()
+    }
+
+  private val quietHit = KeyedEvent(1L, 1000L, 1L, hit = true)
+  private def keyedSentinel(ts: Long) = KeyedEvent(99L, ts, ts, hit = false)
+
+  quietKeyDropsState("consecutive", quietHit, keyedSentinel)(
+    Detectors.consecutive(_, 3, 100, streaming = true))
+  quietKeyDropsState("followedBy", quietHit, keyedSentinel)(
+    Detectors.followedBy(_, 150, "m", "t", streaming = true))
+  quietKeyDropsState("followedByFull", quietHit, keyedSentinel)(
+    Detectors.followedByFull(_, 150, "ok", "late", "orphan", "timeout", streaming = true))
+  quietKeyDropsState("reconcile", TxEvent(1L, 1000L, 1L, hit = true),
+    ts => TxEvent(99L, ts, ts, hit = true))(
+    Detectors.reconcile(_, 5, 3, streaming = true))
+  quietKeyDropsState("PatternDetector", quietHit, keyedSentinel)(
+    PatternDetector.detect(_, PatternSpec(Seq(Stage(_.hit), Stage(e => !e.hit)), 400),
+      streaming = true))
+  // the sentinel lies past the end of the quiet click's day
+  quietKeyDropsState("blacklist", BlEvent(1L, 1L, 1000L, 1L),
+    ts => BlEvent(99L, 99L, ts, ts))(
+    Detectors.blacklist(_, threshold = 3, streaming = true))
+
+  test("blacklist streaming with out-of-order arrival matches batch") {
+    // clicks straddle two midnights, so keys cross days mid-stream
+    val evs = (0 until 200).map { i =>
+      BlEvent(rnd.nextInt(3).toLong, rnd.nextInt(2).toLong,
+        86400L * (1 + rnd.nextInt(2)) - 300 + rnd.nextInt(600), i.toLong)
+    }
+    val expected = Detectors.blacklist(evs.toDS(), threshold = 3, streaming = false)
+      .collect().toSet
+    val input = MemoryStream[BlEvent](5, spark, None)
     val withWm = input.toDS()
       .withColumn("ts", timestamp_seconds(col("tsSec")))
-      .withWatermark("ts", "60 seconds")
-      .as[KeyedEvent]
-    val q = Detectors.consecutive(withWm, 3, 100, streaming = true)
-      .writeStream.format("memory").queryName("quiet_out").outputMode("append").start()
+      .withWatermark("ts", "100 seconds")
+      .as[BlEvent]
+    val q = Detectors.blacklist(withWm, threshold = 3, streaming = true)
+      .writeStream.format("memory").queryName("bl_out").outputMode("append").start()
     try {
-      input.addData(KeyedEvent(1L, 1000L, 1L, hit = true))
+      boundedDisorder(evs, rnd, 60L)(_.tsSec)
+        .foreach { b => input.addData(b); q.processAllAvailable() }
+      input.addData(BlEvent(99L, 99L, 1000000L, 9999L))
       q.processAllAvailable()
-      input.addData(KeyedEvent(99L, 100000L, 2L, hit = false))
-      q.processAllAvailable()
-      // one more trigger after the watermark jump so key 1's expiry timer
-      // fires with no new data for it
-      input.addData(KeyedEvent(99L, 100001L, 3L, hit = false))
-      q.processAllAvailable()
-      // only the sentinel key's buffered events remain as state
-      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 1L)
+      val got = spark.table("bl_out").as[BlOut].collect().toSet
+      assert(got.filterNot(_.user_id == 99L) == expected)
+      assert(expected.exists(_.tag == "warning"))
     } finally q.stop()
   }
 

@@ -71,6 +71,39 @@ class PatternDetectorSpec extends SparkSpec {
     assert(got == Set(PatternMatch(1, 1, 3, 10, 30, 3)))
   }
 
+  test("detectWithMetrics counts capped partials in streaming, none in batch") {
+    // five A's then one B: cap-free, every A completes
+    val evs = (1 to 5).map(i => KeyedEvent(1, 100L + i, i, hit = true)) :+
+      KeyedEvent(1, 110, 6, hit = false)
+    val spec = PatternSpec(Seq(Stage(_.hit), Stage(e => !e.hit)), 1000, maxPartials = 2)
+    val expected = (1 to 5).map(i => PatternMatch(1, i, 6, 100L + i, 110, 2)).toSet
+    val (batch, batchDropped) = PatternDetector.detectWithMetrics(evs.toDS(), spec,
+      streaming = false)
+    assert(batch.collect().toSet == expected)
+    assert(batchDropped.value == 0L)
+
+    val input = MemoryStream[KeyedEvent](32, spark, None)
+    val withWm = input.toDS()
+      .withColumn("ts", timestamp_seconds(col("tsSec")))
+      .withWatermark("ts", "10 seconds")
+      .as[KeyedEvent]
+    val (stream, dropped) = PatternDetector.detectWithMetrics(withWm, spec, streaming = true)
+    val q = stream.writeStream.format("memory").queryName("pat_cap_out")
+      .outputMode("append").start()
+    try {
+      input.addData(evs)
+      q.processAllAvailable()
+      input.addData(KeyedEvent(99, 100000L, 9998, hit = false))
+      q.processAllAvailable()
+      input.addData(KeyedEvent(99, 100001L, 9999, hit = false))
+      q.processAllAvailable()
+      assert(dropped.value > 0L)
+      // the cap keeps the newest partials
+      assert(spark.table("pat_cap_out").as[PatternMatch].collect().toSet ==
+        expected.filter(_.first_id >= 4))
+    } finally q.stop()
+  }
+
   test("streaming pattern detection matches batch under bounded disorder") {
     val evs = randomEvents(300, 4, 1500)
     val expected = PatternDetector.detect(evs.toDS(),
