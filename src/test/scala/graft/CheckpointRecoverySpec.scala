@@ -1,8 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
  * Streaming fault tolerance: a windowed-count query with a file checkpoint,
@@ -11,16 +16,65 @@ import org.apache.spark.sql.functions._
  * (Structured Streaming's exactly-once contract via checkpointed offsets +
  * state store — the recovery story the reference never enables, SURVEY §4
  * "checkpointing unused").
+ *
+ * The first half arrives as more than ten files read one per micro-batch,
+ * so the first run commits more state versions than a store keeps as
+ * deltas (or changelogs) before it takes a snapshot, and the restart
+ * recovers from a snapshot plus the deltas after it.
  */
 class CheckpointRecoverySpec extends SparkSpec {
   import spark.implicits._
+
+  /** Appends the rows of `df` whose `key` lies in [lo, hi) to `dir`, one
+    * file per `step` of `key` in ascending order. */
+  private def appendSteps(df: DataFrame, key: Column, lo: Long, hi: Long, step: Long,
+                          dir: String): Unit =
+    (lo until hi by step).foreach { s =>
+      df.filter(key >= s && key < math.min(s + step, hi)).coalesce(1)
+        .write.mode("append").parquet(dir)
+    }
+
+  /** The files of a checkpoint's state directory, counted by extension
+    * (checksum files left out). */
+  private def stateFiles(ckpt: String): Map[String, Int] =
+    Using.resource(Files.walk(Paths.get(ckpt, "state")))(_.iterator.asScala
+      .map(_.getFileName.toString).filter(n => n.contains('.') && !n.endsWith(".crc"))
+      .toSeq.groupMapReduce(n => n.substring(n.lastIndexOf('.') + 1))(_ => 1)(_ + _))
+
+  private val UnloadOnCommit = "spark.sql.streaming.stateStore.unloadOnCommit"
+
+  /** The first run: drained over more than ten micro-batches, then
+    * stopped. With `unloadOnCommit` every commit runs the store's
+    * maintenance at once and every batch reloads its state from the
+    * checkpoint, so the snapshot a store takes every `minDeltasForSnapshot`
+    * versions is on disk before the stop (Spark's 60 s maintenance timer
+    * would not fire within the run), and the restart loads that snapshot
+    * and replays the deltas or changelogs after it. */
+  private def firstRun(q: => StreamingQuery, ckpt: String): Unit = {
+    spark.conf.set(UnloadOnCommit, "true")
+    try {
+      val run = q
+      try {
+        run.processAllAvailable()
+        assert(run.lastProgress.batchId >= 10, s"only ${run.lastProgress.batchId + 1} batches")
+      } finally run.stop()
+    } finally spark.conf.unset(UnloadOnCommit)
+    val files = stateFiles(ckpt)
+    info(s"state after the first run: ${files.toSeq.sorted.map { case (e, n) => s"$n $e" }.mkString(", ")}")
+    // HDFS-backed store: <version>.snapshot; RocksDB: <version>.zip
+    assert(files.contains("snapshot") || files.contains("zip"), s"no state snapshot: $files")
+  }
+
+  private def drain(q: StreamingQuery): Unit = try q.processAllAvailable() finally q.stop()
 
   test("windowed count resumes from checkpoint without duplicate or lost windows") {
     val srcDir = Files.createTempDirectory("graft_ckpt_src").toString
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val events = graft.sources.Tables.events(spark, sf0001)
       .select(col("ts"), col("event_type"))
-    val mid = "2024-01-15 00:00:00"
+    val day = floor(col("ts").cast("long") / 86400L)
+    val (firstDay, lastDay) = events.agg(min(day), max(day)).as[(Long, Long)].head()
+    val midDay = (firstDay + lastDay + 1) / 2 // 2024-01-15 at sf0.001
 
     val batchExpected = graft.ops.WindowOps.epochWindow(
         graft.ops.WindowOps.tumblingCount(
@@ -50,20 +104,16 @@ class CheckpointRecoverySpec extends SparkSpec {
         .start()
     }
 
-    // phase 1: only the first half of the (time-ordered) input exists
-    events.filter(col("ts") < mid).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
+    // phase 1: only the first half of the input exists, a file per day
+    appendSteps(events, day, firstDay, midDay, 1, srcDir)
+    firstRun(start(), ckpt)
     val afterFirst = emitted.synchronized(emitted.size)
 
     // phase 2: the rest + a sentinel arrive; restart from the checkpoint
-    events.filter(col("ts") >= mid).coalesce(1)
-      .write.mode("append").parquet(srcDir)
+    events.filter(day >= midDay).coalesce(1).write.mode("append").parquet(srcDir)
     Seq((java.sql.Timestamp.from(java.time.Instant.parse("2026-01-01T00:00:00Z")), "view"))
       .toDF("ts", "event_type").write.mode("append").parquet(srcDir)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
+    drain(start())
 
     val gotWindows = emitted.synchronized(emitted.toList)
       .filterNot(_._1 >= 1767225600L) // drop the sentinel's own window
@@ -112,11 +162,10 @@ class CheckpointRecoverySpec extends SparkSpec {
         .start()
     }
 
-    // phase 1: first half of the corpus (doc_id IS the event clock)
-    docEvents.filter(col("doc_id") < 250).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
+    // phase 1: first half of the corpus (doc_id IS the event clock), 20
+    // documents a file
+    appendSteps(docEvents, col("doc_id"), 0, 250, 20, srcDir)
+    firstRun(start(), ckpt)
     val afterFirst = emitted.synchronized(emitted.size)
 
     // phase 2: the rest + a watermark-advancing sentinel; restart
@@ -124,8 +173,7 @@ class CheckpointRecoverySpec extends SparkSpec {
       .write.mode("append").parquet(srcDir)
     Seq(("zz_sentinel", 999999L, 1000000L)).toDF("h", "doc_id", "sec")
       .write.mode("append").parquet(srcDir)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
+    drain(start())
 
     val got = emitted.synchronized(emitted.toList)
       .filterNot(_.h == "zz_sentinel")

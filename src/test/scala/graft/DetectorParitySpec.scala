@@ -13,9 +13,53 @@ import graft.ops.{JoinOps, StatefulOps}
 import graft.streaming.Detectors
 import graft.streaming.Detectors._
 
+/** The quiet-key case: a detector's state for a key is removed once the
+  * key's buffer drains and nothing else is left, so state does not grow
+  * with the number of keys ever seen. */
+trait QuietKeyCases { this: SparkSpec =>
+
+  /** Feed one event for a quiet key, then a far-future sentinel key that
+    * carries the watermark past every deadline (and past end of day), then
+    * one more trigger so the quiet key's timer fires with no new data. */
+  protected def quietKeyDropsState[E <: Product : TypeTag](name: String, quiet: E,
+      sentinel: Long => E)(detector: Dataset[E] => Dataset[_]): Unit =
+    test(s"$name detector removes state rows for keys that go quiet") {
+      import spark.implicits._
+      val input = MemoryStream[E](21, spark, None)
+      val withWm = input.toDS()
+        .withColumn("ts", timestamp_seconds(col("tsSec")))
+        .withWatermark("ts", "60 seconds")
+        .as[E]
+      val q = detector(withWm)
+        .writeStream.format("memory").queryName(s"quiet_$name").outputMode("append").start()
+      try {
+        input.addData(quiet)
+        q.processAllAvailable()
+        input.addData(sentinel(100000L))
+        q.processAllAvailable()
+        input.addData(sentinel(100001L))
+        q.processAllAvailable()
+        // only the sentinel key's buffered events remain as state
+        assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 1L)
+      } finally q.stop()
+    }
+
+  protected val quietHit = KeyedEvent(1L, 1000L, 1L, hit = true)
+  protected def keyedSentinel(ts: Long) = KeyedEvent(99L, ts, ts, hit = false)
+
+  protected def consecutiveGoesQuiet(): Unit =
+    quietKeyDropsState("consecutive", quietHit, keyedSentinel)(
+      Detectors.consecutive(_, 3, 100, streaming = true))
+
+  protected def reconcileGoesQuiet(): Unit =
+    quietKeyDropsState("reconcile", TxEvent(1L, 1000L, 1L, hit = true),
+      ts => TxEvent(99L, ts, ts, hit = true))(
+      Detectors.reconcile(_, 5, 3, streaming = true))
+}
+
 /** Parity of the followed-by (order timeout), blacklist, and reconcile
   * streaming detectors against their declarative batch formulations. */
-class DetectorParitySpec extends SparkSpec {
+class DetectorParitySpec extends SparkSpec with QuietKeyCases {
   import spark.implicits._
 
   private val rnd = new Random(7)
@@ -139,43 +183,12 @@ class DetectorParitySpec extends SparkSpec {
     assert(gotWarn.nonEmpty)
   }
 
-  /** Feed one event for a quiet key, then a far-future sentinel key that
-    * carries the watermark past every deadline (and past end of day), then
-    * one more trigger so the quiet key's timer fires with no new data. */
-  private def quietKeyDropsState[E <: Product : TypeTag](name: String, quiet: E,
-      sentinel: Long => E)(detector: Dataset[E] => Dataset[_]): Unit =
-    test(s"$name detector removes state rows for keys that go quiet") {
-      val input = MemoryStream[E](21, spark, None)
-      val withWm = input.toDS()
-        .withColumn("ts", timestamp_seconds(col("tsSec")))
-        .withWatermark("ts", "60 seconds")
-        .as[E]
-      val q = detector(withWm)
-        .writeStream.format("memory").queryName(s"quiet_$name").outputMode("append").start()
-      try {
-        input.addData(quiet)
-        q.processAllAvailable()
-        input.addData(sentinel(100000L))
-        q.processAllAvailable()
-        input.addData(sentinel(100001L))
-        q.processAllAvailable()
-        // only the sentinel key's buffered events remain as state
-        assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 1L)
-      } finally q.stop()
-    }
-
-  private val quietHit = KeyedEvent(1L, 1000L, 1L, hit = true)
-  private def keyedSentinel(ts: Long) = KeyedEvent(99L, ts, ts, hit = false)
-
-  quietKeyDropsState("consecutive", quietHit, keyedSentinel)(
-    Detectors.consecutive(_, 3, 100, streaming = true))
+  consecutiveGoesQuiet()
   quietKeyDropsState("followedBy", quietHit, keyedSentinel)(
     Detectors.followedBy(_, 150, "m", "t", streaming = true))
   quietKeyDropsState("followedByFull", quietHit, keyedSentinel)(
     Detectors.followedByFull(_, 150, "ok", "late", "orphan", "timeout", streaming = true))
-  quietKeyDropsState("reconcile", TxEvent(1L, 1000L, 1L, hit = true),
-    ts => TxEvent(99L, ts, ts, hit = true))(
-    Detectors.reconcile(_, 5, 3, streaming = true))
+  reconcileGoesQuiet()
   quietKeyDropsState("PatternDetector", quietHit, keyedSentinel)(
     PatternDetector.detect(_, PatternSpec(Seq(Stage(_.hit), Stage(e => !e.hit)), 400),
       streaming = true))

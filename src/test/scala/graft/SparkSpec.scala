@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one local SparkSession per JVM across suites. */
+/** Shared session: one local SparkSession per JVM across suites. It is a
+  * plain session, not a [[GraftSession]]: Spark's HDFS-backed state store,
+  * the stock `file:` filesystem, the default codegen cache. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -16,6 +18,17 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A new session of the shared context with `conf` set on it. */
+  def sessionWith(conf: Seq[(String, String)]): SparkSession = {
+    val s = spark.newSession()
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** The shared context with the engine's state store: RocksDB with
+    * changelog checkpointing, as every [[GraftSession]] has it. */
+  lazy val productionStore: SparkSession = sessionWith(GraftSession.StateStore)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

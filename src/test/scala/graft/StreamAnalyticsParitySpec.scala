@@ -87,13 +87,14 @@ class StreamAnalyticsParitySpec extends SparkSpec {
     val input = MemoryStream[WeekEvent](32, spark, None)
     val withWm = input.toDS()
       .withColumn("ts", timestamp_seconds(col("sec")))
-      .withWatermark("ts", "1000 seconds")
+      .withWatermark("ts", "60000 seconds")
       .as[WeekEvent]
     val q = Detectors.retentionCells(withWm, streaming = true)
       .writeStream.format("memory").queryName("ret_out")
       .outputMode("append").start()
     try {
-      boundedDisorder(evs, rnd, 900L)(_.sec)
+      // ~50 buckets over the 3,000,000 s span, so ~50 triggers
+      boundedDisorder(evs, rnd, 60000L)(_.sec)
         .foreach { b => input.addData(b); q.processAllAvailable() }
       input.addData(WeekEvent(99999L, 100000000L))
       q.processAllAvailable()

@@ -3,16 +3,16 @@ package graft.io
 import java.io.{FileNotFoundException, IOException}
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, Path => JPath}
+import java.nio.file.{Files, Path => JPath}
 
 import scala.jdk.CollectionConverters._
 
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ProcessStarts
 
 /** The graft `file:` filesystem against Hadoop's stock local filesystem:
   * the same files, modes and statuses through both the `FileSystem` and
@@ -155,30 +155,15 @@ class LocalFsSpec extends AnyFunSuite {
     assert(graft._2.toMap == Map("sticky" -> Integer.parseInt("1755", 8), "f" -> Integer.parseInt("604", 8)))
   }
 
-  /** Commands of the processes this thread started while `body` ran. */
-  private def processStarts(body: => Unit): Seq[String] = {
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart")
-    val self = Thread.currentThread.getId
-    rec.start()
-    try body finally rec.stop()
-    val file = Files.createTempFile("graft-localfs", ".jfr")
-    try {
-      rec.dump(file)
-      RecordingFile.readAllEvents(file).asScala.toSeq
-        .filter(e => e.getEventType.getName == "jdk.ProcessStart" &&
-          e.getThread != null && e.getThread.getJavaThreadId == self)
-        .map(_.getString("command"))
-    } finally { rec.close(); Files.deleteIfExists(file) }
-  }
-
-  /** 50 cycles of the filesystem calls a streaming commit makes. */
-  private def commitCycles(impl: (String, String)): Seq[String] = {
+  /** The processes this thread started over 50 cycles of the filesystem
+    * calls a streaming commit makes. */
+  private def commitCycles(impl: (String, String)): Seq[ProcessStarts.Start] = {
     val (fs, fc) = open(impl)
     val dir = tmpDir("forks")
     val local = dir.resolve("local.sst")
     Files.write(local, Array.fill[Byte](1024)(7))
-    try processStarts {
+    val self = Thread.currentThread.getId
+    try ProcessStarts.during {
       (1 to 50).foreach { i =>
         assert(fs.mkdirs(hpath(dir.resolve(s"state/$i"))))
         val tmp = hpath(dir.resolve(s"offsets/.$i.tmp"))
@@ -188,12 +173,11 @@ class LocalFsSpec extends AnyFunSuite {
         fc.rename(tmp, hpath(dir.resolve(s"offsets/$i")), Options.Rename.OVERWRITE)
         fs.copyFromLocalFile(false, true, hpath(local), hpath(dir.resolve(s"state/$i/$i.sst")))
       }
-    } finally { fs.close(); deleteTree(dir) }
+    }.filter(_.threadId == self) finally { fs.close(); deleteTree(dir) }
   }
 
-  private def shellForks(commands: Seq[String]): Seq[String] = commands.filter { c =>
-    Set("chmod", "readlink", "stat", "ls")(Paths.get(c.trim.split("\\s+")(0)).getFileName.toString)
-  }
+  private def shellForks(starts: Seq[ProcessStarts.Start]): Seq[String] =
+    starts.filter(s => Set("chmod", "readlink", "stat", "ls")(s.program)).map(_.command)
 
   test("commit cycles start no chmod/readlink/stat/ls process; stock ones do") {
     // the guard is live: without libhadoop, stock Hadoop forks on this path
