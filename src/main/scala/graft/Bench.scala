@@ -86,7 +86,8 @@ object Bench {
     // delivery/takedown-sized cost, and with SPARK_GRAFT_BENCH_WARMUPS=0
     // their lazy one-time base resolution would otherwise land inside
     // timed rep 0 (and its CC runs inside CC_ROUNDS.json), contradicting
-    // the very claim the rows measure
+    // the very claim the rows measure. A prime that fails ends the run:
+    // carrying on would fold the build into timed rep 0 instead
     try {
       graft.queries.ClusterState.baseStatePaths(spark, sfDir,
         graft.queries.ClusterState.PersistDeliveryMod)
@@ -104,7 +105,7 @@ object Bench {
       graft.queries.IndexState.bm25ImpactRankedPaths(spark, sfDir)
       graft.queries.IndexState.rrfBruteFusedPaths(spark, sfDir)
       graft.ops.ClusterOps.CcStats.drain()
-    } catch { case e: Throwable => System.err.println(s"[bench] state prime: $e") }
+    } catch { case e: Throwable => spark.stop(); throw e }
     // per-(query, rep) CC fixpoint forensics: variant, round count, and
     // per-round wall millis, drained from ClusterOps.CcStats after each
     // timed rep — the r7 verdict's open question (driver-measured

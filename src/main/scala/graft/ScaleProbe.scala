@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.io.PublishOnce
 import graft.queries.StreamingJobs
 import graft.sources.cdc.CdcFeed
 import graft.sources.cdc.CdcFeed.CdcEvent
@@ -99,36 +100,33 @@ object ScaleProbe {
     Array.fill(64)((r.nextFloat() - 0.5f) * 2f)
   }
 
-  /** Deterministic synthetic corpus at `dir` — documents + embeddings in
-    * the testdata layout, generated distributed and skipped when the
-    * marker for this exact size is already on disk. */
-  private def genCorpus(spark: SparkSession, dir: String,
-                        nDocs: Long, nVecs: Long): Unit = {
-    val marker = new File(dir, s"_GEN_DONE_${nDocs}_$nVecs")
-    if (marker.isFile) return
-    import spark.implicits._
-    val seed = 20260815L
-    val langs = Array("en", "en", "en", "en", "en", "zh", "zh", "fr", "es", "de")
-    spark.range(nDocs).as[Long].map { id =>
-      val r = new scala.util.Random(mix(seed, id) ^ 0xABCDL)
-      val text = docText(seed, id)
-      (id, text, langs(r.nextInt(langs.length)), "src" + r.nextInt(20),
-        text.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val centers = Array.tabulate(10)(center)
-    spark.range(nVecs).as[Long].map { id =>
-      val r = new scala.util.Random(mix(seed, id) ^ 0xEEL)
-      val lb = r.nextInt(10)
-      val c = centers(lb)
-      (id, Array.tabulate(64)(j => c(j) + (r.nextFloat() - 0.5f) * 0.4f), lb)
-    }.toDF("vec_id", "embedding", "label")
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    marker.createNewFile()
-    ()
-  }
+  /** Deterministic synthetic corpus of this exact size under `base` —
+    * documents + embeddings in the testdata layout, generated distributed
+    * once and published as one directory, whose path is returned. */
+  private def genCorpus(spark: SparkSession, base: String,
+                        nDocs: Long, nVecs: Long): String =
+    PublishOnce(new File(base, s"corpus/docs${nDocs}_vecs$nVecs")) { tmp =>
+      import spark.implicits._
+      val seed = 20260815L
+      val langs = Array("en", "en", "en", "en", "en", "zh", "zh", "fr", "es", "de")
+      spark.range(nDocs).as[Long].map { id =>
+        val r = new scala.util.Random(mix(seed, id) ^ 0xABCDL)
+        val text = docText(seed, id)
+        (id, text, langs(r.nextInt(langs.length)), "src" + r.nextInt(20),
+          text.length.toLong)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .repartition(32)
+        .write.parquet(s"$tmp/documents.parquet")
+      val centers = Array.tabulate(10)(center)
+      spark.range(nVecs).as[Long].map { id =>
+        val r = new scala.util.Random(mix(seed, id) ^ 0xEEL)
+        val lb = r.nextInt(10)
+        val c = centers(lb)
+        (id, Array.tabulate(64)(j => c(j) + (r.nextFloat() - 0.5f) * 0.4f), lb)
+      }.toDF("vec_id", "embedding", "label")
+        .repartition(32)
+        .write.parquet(s"$tmp/embeddings.parquet")
+    }.getPath
 
   /** Deterministic ZIPF-text corpus — inverse-CDF Zipf over 5000 ranks
     * (P(rank) ∝ 1/rank), VARIED doc length (30–90 words): the
@@ -140,67 +138,66 @@ object ScaleProbe {
     * mass defeats any boundary certificate — a measured pathology of
     * the SYNTHETIC corpus, not of natural text, whose dl spread keeps
     * score margins open. (The uniform-vocab [[genCorpus]] remains the
-    * family's measured worst case.) */
-  private def genZipfCorpus(spark: SparkSession, dir: String,
-                            nDocs: Long): Unit = {
-    val marker = new File(dir, s"_GEN_ZIPFV3_$nDocs")
-    if (marker.isFile) return
-    import spark.implicits._
-    val hN = (1 to 5000).map(1.0 / _).sum
-    spark.range(nDocs).as[Long].map { id =>
-      val r = new scala.util.Random(id * 2654435761L + 7)
-      // bursty draws (Church & Gale): a drawn word repeats with
-      // geometric tail, giving the heavy-tailed per-doc tf real text
-      // has — without it every tf is 1-2, impact lists are flat, and
-      // no boundary certificate can clear the tail bounds
-      val words = Array.newBuilder[String]
-      val draws = 20 + r.nextInt(41)
-      var i = 0
-      while (i < draws) {
-        var u = r.nextDouble() * hN; var rank = 0
-        while (u > 0 && rank < 5000) { rank += 1; u -= 1.0 / rank }
-        val w = s"t$rank"
-        words += w
-        while (r.nextInt(100) < 35) words += w // geometric burst
-        i += 1
-      }
-      (id, words.result().mkString(" "))
-    }.toDF("doc_id", "text")
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    marker.createNewFile()
-    ()
-  }
+    * family's measured worst case.) The generator version (v3) is part
+    * of the published name. */
+  private def genZipfCorpus(spark: SparkSession, base: String,
+                            nDocs: Long): String =
+    PublishOnce(new File(base, s"corpus/zipf_v3_docs$nDocs")) { tmp =>
+      import spark.implicits._
+      val hN = (1 to 5000).map(1.0 / _).sum
+      spark.range(nDocs).as[Long].map { id =>
+        val r = new scala.util.Random(id * 2654435761L + 7)
+        // bursty draws (Church & Gale): a drawn word repeats with
+        // geometric tail, giving the heavy-tailed per-doc tf real text
+        // has — without it every tf is 1-2, impact lists are flat, and
+        // no boundary certificate can clear the tail bounds
+        val words = Array.newBuilder[String]
+        val draws = 20 + r.nextInt(41)
+        var i = 0
+        while (i < draws) {
+          var u = r.nextDouble() * hN; var rank = 0
+          while (u > 0 && rank < 5000) { rank += 1; u -= 1.0 / rank }
+          val w = s"t$rank"
+          words += w
+          while (r.nextInt(100) < 35) words += w // geometric burst
+          i += 1
+        }
+        (id, words.result().mkString(" "))
+      }.toDF("doc_id", "text")
+        .repartition(32)
+        .write.parquet(s"$tmp/documents.parquet")
+    }.getPath
 
   /** CDC feed over the corpus' first `nDocs` docs: adds in fixed-size
     * deliveries, each delivery also removing 5 % of its predecessor —
-    * the interleaved add/takedown shape the lifecycle specs use. */
+    * the interleaved add/takedown shape the lifecycle specs use. Built
+    * once and published as the directory `feedDir`; returns its
+    * delivery count. */
   private def genFeed(spark: SparkSession, corpusDir: String, feedDir: String,
                       nDocs: Long, deliverySize: Int): Int = {
-    import spark.implicits._
-    val done = new File(feedDir, "_FEED_DONE")
-    if (done.isFile) return CdcFeed.listBatchFiles(feedDir).length
-    val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
-      .filter(col("doc_id") < nDocs)
-      .select("doc_id", "text").as[(Long, String)]
-      .collect().sortBy(_._1) // probe tool: bounded by the probed corpus
-    var seq = 0L
-    def nextSeq(): Long = { val s = seq; seq += 1; s }
-    val deliveries = docs.grouped(deliverySize).toVector
-    deliveries.zipWithIndex.foreach { case (d, i) =>
-      // capture the seq ONCE per event: ts is keyed to the event's own
-      // seq, not whatever the mutable counter reads after later events
-      val adds = d.map { case (id, t) =>
-        val s = nextSeq(); CdcEvent("add", s, id, 1000L + s, t) }.toSeq
-      val rems =
-        if (i == 0) Seq.empty
-        else deliveries(i - 1).map(_._1).filter(_ % 20 == 0)
-          .map { id =>
-            val s = nextSeq(); CdcEvent("remove", s, id, 1000L + s, "") }.toSeq
-      CdcFeed.writeBatch(feedDir, i, adds ++ rems)
+    val feed = PublishOnce(new File(feedDir)) { tmp =>
+      import spark.implicits._
+      val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
+        .filter(col("doc_id") < nDocs)
+        .select("doc_id", "text").as[(Long, String)]
+        .collect().sortBy(_._1) // probe tool: bounded by the probed corpus
+      var seq = 0L
+      def nextSeq(): Long = { val s = seq; seq += 1; s }
+      val deliveries = docs.grouped(deliverySize).toVector
+      deliveries.zipWithIndex.foreach { case (d, i) =>
+        // capture the seq ONCE per event: ts is keyed to the event's own
+        // seq, not whatever the mutable counter reads after later events
+        val adds = d.map { case (id, t) =>
+          val s = nextSeq(); CdcEvent("add", s, id, 1000L + s, t) }.toSeq
+        val rems =
+          if (i == 0) Seq.empty
+          else deliveries(i - 1).map(_._1).filter(_ % 20 == 0)
+            .map { id =>
+              val s = nextSeq(); CdcEvent("remove", s, id, 1000L + s, "") }.toSeq
+        CdcFeed.writeBatch(tmp.getPath, i, adds ++ rems)
+      }
     }
-    done.createNewFile()
-    deliveries.length
+    CdcFeed.listBatchFiles(feed.getPath).length
   }
 
   private def cdcStream(spark: SparkSession, dir: String): DataFrame =
@@ -280,8 +277,7 @@ object ScaleProbe {
     catch { case e: Throwable => System.err.println(s"[scale] session warmup: $e") }
 
     scales.foreach { s =>
-      val dir = s"$base/x$s"
-      genCorpus(spark, dir, 5000L * s, 2000L * s)
+      val dir = genCorpus(spark, base, 5000L * s, 2000L * s)
 
       // the last four are the delivery-fold (_persist / probe) class:
       // their corpus-sized state builds in the untimed warmup (the Bench
@@ -394,8 +390,7 @@ object ScaleProbe {
             (q.toLong, s"t${300 + r.nextInt(200)}"),
             (q.toLong, s"t${500 + r.nextInt(2500)}"))
         }.distinct.toDF("q_id", "term")
-        val zdir = s"$base/zipf_x$s"
-        genZipfCorpus(spark, zdir, 5000L * s)
+        val zdir = genZipfCorpus(spark, base, 5000L * s)
         // three (corpus, load) rows: zipf × 64 short queries (the
         // deployment search load), zipf × 64 DOCUMENT-LENGTH queries
         // (the r14 93-second load — where serve_qload_lex measured the
@@ -412,35 +407,31 @@ object ScaleProbe {
         ).foreach { case (prof, corpusKey, docsPath, load) =>
           // the index quadruple + impact-RANKED store persist to parquet
           // (ranked partitioned by the level bucket — the serving
-          // layout), built once per (corpus, scale) behind a marker:
-          // the timed serves read the store, as a deployment would
-          // the ladder is part of the store-layout identity (the
+          // layout), built once per (corpus, scale) and published as one
+          // directory: the timed serves read the store, as a deployment
+          // would. The ladder is part of the store-layout identity (the
           // bm25ImpactRankedPaths convention): a CertLevels/CertFrac
           // change must rebuild the leveled store, or the deeper tail
           // lookups read an absent bucket (tail 0) and the probe's
           // certificate fires unsoundly
           val ladderTag = s"nd${graft.queries.PipelineQueries.CertFrac}_" +
             graft.queries.PipelineQueries.CertLevels.mkString("_")
-          val idxRoot = s"$base/certidx_${corpusKey}_x$s"
-          val idxDone = new File(idxRoot, s"_IDX_DONE_$ladderTag")
-          if (!idxDone.isFile) {
+          val idxRoot = PublishOnce(
+              new File(base, s"certidx/${corpusKey}_x${s}_$ladderTag")) { tmp =>
             val docs = spark.read.parquet(docsPath).select("doc_id", "text")
             val tok0 = graft.queries.PipelineQueries.bm25Postings(docs)
-            tok0.write.mode("overwrite").parquet(s"$idxRoot/tok")
+            tok0.write.parquet(s"$tmp/tok")
             val dl0 = tok0.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-            dl0.write.mode("overwrite").parquet(s"$idxRoot/dl")
+            dl0.write.parquet(s"$tmp/dl")
             val dft0 = tok0.groupBy("term").agg(count(lit(1)).as("df"))
-            dft0.write.mode("overwrite").parquet(s"$idxRoot/dft")
+            dft0.write.parquet(s"$tmp/dft")
             dl0.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-              .write.mode("overwrite").parquet(s"$idxRoot/stats")
+              .write.parquet(s"$tmp/stats")
             graft.queries.PipelineQueries
-              .bm25ImpactRanked(tok0, dl0, dft0,
-                spark.read.parquet(s"$idxRoot/stats"))
+              .bm25ImpactRanked(tok0, dl0, dft0, spark.read.parquet(s"$tmp/stats"))
               .repartition(col("lvl"))
-              .write.mode("overwrite").partitionBy("lvl")
-              .parquet(s"$idxRoot/ranked")
-            idxDone.createNewFile()
-          }
+              .write.partitionBy("lvl").parquet(s"$tmp/ranked")
+          }.getPath
           val tok = spark.read.parquet(s"$idxRoot/tok")
           val dl = spark.read.parquet(s"$idxRoot/dl")
           val dft = spark.read.parquet(s"$idxRoot/dft")
@@ -574,7 +565,7 @@ object ScaleProbe {
       }
 
       if (want("bm25_fold")) {
-        val feed = s"$base/feed_bm25_x$s"
+        val feed = s"$base/feed/bm25_x$s"
         val n = genFeed(spark, dir, feed, 5000L * s, 1250)
         val reps = if (s >= 10) 1 else 2
         val runs = (0 until reps).map { _ =>
@@ -598,7 +589,7 @@ object ScaleProbe {
       // ~delivery 100) is what these rows test directly.
       if (want("press_fold") || want("press_fold_tagged") ||
           want("press_fold_tagged_kb")) {
-        val feed = s"$base/feed_cp_x$s" // same shape as corpus_pipeline
+        val feed = s"$base/feed/cp_x$s" // same shape as corpus_pipeline
         val n = genFeed(spark, dir, feed, 2000L * s, 500)
         // third mode (r15 verdict #5 re-adjudication): tagged + delta
         // folds with the bounded point reads routed through the
@@ -625,7 +616,7 @@ object ScaleProbe {
       }
 
       if (want("corpus_pipeline") || want("corpus_pipeline_probe")) {
-        val feed = s"$base/feed_cp_x$s"
+        val feed = s"$base/feed/cp_x$s"
         val n = genFeed(spark, dir, feed, 2000L * s, 500)
         val emb = graft.sources.Tables.embeddings(spark, dir)
           .filter(col("vec_id") < 2000L * s)

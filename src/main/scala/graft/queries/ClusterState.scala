@@ -22,11 +22,15 @@ import graft.sources.Tables
  * 100 TB deployment runs per delivery.
  *
  * State is keyed by the data directory plus a (size, mtime) fingerprint of
- * `documents.parquet`, so a regenerated corpus can never be served stale
- * state; a missing `_DONE` marker (a prior process died mid-write) forces
- * a clean overwrite recompute. The write lands under `target/` (the build
- * dir, relative to the process cwd like every bench artifact) — never in
- * the read-only data directories.
+ * `documents.parquet` and `embeddings.parquet`, so a regenerated corpus
+ * can never be served stale state. Each artifact is one directory under
+ * the root's `artifacts/`, built into a tmp sibling and published by one
+ * atomic rename ([[graft.io.PublishOnce]]): a published directory is
+ * complete by construction, a crashed or losing build leaves only an
+ * inert `.tmp-*` sibling, and a deleted artifact is rebuilt on next use.
+ * The write lands under `target/` (the build dir, relative to the process
+ * cwd like every bench artifact) — never in the read-only data
+ * directories.
  */
 object ClusterState {
 
@@ -60,9 +64,6 @@ object ClusterState {
   val PqNSub = 8
   val PqSubDim = 8
 
-  /** Process-local fast path: state roots already verified on disk. */
-  private val ready = scala.collection.mutable.Set[String]()
-
   private[queries] def stateRoot(dir: String): File = {
     // BOTH corpora fingerprint the root: the dense store
     // ([[IndexState.denseStorePaths]]) derives from embeddings.parquet,
@@ -76,35 +77,33 @@ object ClusterState {
     new File(s"target/graft-state/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}_$fp")
   }
 
+  /** Absolute path of the artifact `name` of `dir`'s state, which `build`
+    * writes on first use into the path it is handed. Identity (geometry,
+    * layout) belongs in `name`: a published name is served as it is
+    * until it is deleted. */
+  private[queries] def artifact(dir: String, name: String)(build: String => Unit): String =
+    graft.io.PublishOnce(new File(stateRoot(dir), s"artifacts/$name"))(
+      tmp => build(tmp.getAbsolutePath)).getAbsolutePath
+
   /** Absolute parquet paths of (full-corpus assignment, full near-dup pair
     * list) for `dir` — the state a production pipeline persists next to
     * its resolution, and exactly what [[ClusterOps.removeFromClusters]]
     * consumes. Computing and persisting happen on first use;
     * [[PipelineQueries.dedupClustersTakedownPersist]] then pays only
     * takedown-batch-sized work per timed run. */
-  def fullStatePaths(spark: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val root = stateRoot(dir)
-      val assignP = new File(root, "full_assign").getAbsolutePath
-      val pairsP = new File(root, "full_pairs").getAbsolutePath
-      val done = new File(root, "_DONE_FULL")
-      if (!ready.contains(done.getAbsolutePath)) {
-        if (!done.exists()) {
-          val docs = Tables.documents(spark, dir)
-          val pairs = DedupOps.minhashPairs(
-            DedupOps.allShingles(docs, "text", 3),
-            BandPerms, BandRows, BandThreshold).localCheckpoint()
-          val cc = ClusterOps.connectedComponentsStar(pairs, "doc_a", "doc_b")
-            .withColumnRenamed("id", "doc_id")
-          val assign = PipelineQueries.attachSingletons(docs, cc)
-          assign.write.mode("overwrite").parquet(assignP)
-          pairs.select("doc_a", "doc_b").write.mode("overwrite").parquet(pairsP)
-          done.createNewFile()
-        }
-        ready += done.getAbsolutePath
-      }
-      (assignP, pairsP)
+  def fullStatePaths(spark: SparkSession, dir: String): (String, String) = {
+    val p = artifact(dir, s"full_p${BandPerms}r$BandRows") { tmp =>
+      val docs = Tables.documents(spark, dir)
+      val pairs = DedupOps.minhashPairs(
+        DedupOps.allShingles(docs, "text", 3),
+        BandPerms, BandRows, BandThreshold).localCheckpoint()
+      val cc = ClusterOps.connectedComponentsStar(pairs, "doc_a", "doc_b")
+        .withColumnRenamed("id", "doc_id")
+      PipelineQueries.attachSingletons(docs, cc).write.parquet(s"$tmp/assign")
+      pairs.select("doc_a", "doc_b").write.parquet(s"$tmp/pairs")
     }
+    (s"$p/assign", s"$p/pairs")
+  }
 
   /** Absolute parquet paths of (base assignment, base signature-set index,
     * base BANDED index) for `dir`'s base split (doc_id % `mod` != 0; the
@@ -121,39 +120,24 @@ object ClusterState {
     * from-scratch resolution (persist 2.339 s vs dedup_clusters 2.341 s),
     * defeating the row's purpose. */
   def baseStatePaths(spark: SparkSession, dir: String,
-                     mod: Int = 5): (String, String, String) =
-    synchronized {
-      val root = stateRoot(dir)
-      // geometry in the names: state fitted at (perms, rows) can never be
-      // served to a probe tuned to a different geometry
-      val geo = s"m${mod}_p${BandPerms}r$BandRows"
-      val assignP = new File(root, s"base_assign_$geo").getAbsolutePath
-      val setsP = new File(root, s"base_sets_$geo").getAbsolutePath
-      val bandsP = new File(root, s"base_bands_$geo").getAbsolutePath
-      // marker versioned for the state layout: a pre-banded-index _DONE
-      // must not satisfy a reader that now expects the bands table
-      val done = new File(root, s"_DONE_${geo}_banded")
-      if (!ready.contains(done.getAbsolutePath)) {
-        if (!done.exists()) {
-          val base = Tables.documents(spark, dir)
-            .filter(org.apache.spark.sql.functions.expr(s"doc_id % $mod != 0"))
-          val bSets = DedupOps.setsOfShingles(
-            DedupOps.allShingles(base, "text", 3)).localCheckpoint()
-          val basePairs = DedupOps.minhashPairsOfSets(
-            bSets, BandPerms, BandRows, BandThreshold)
-          val baseCc = ClusterOps.connectedComponentsStar(basePairs, "doc_a", "doc_b")
-            .withColumnRenamed("id", "doc_id")
-          val baseAssign = PipelineQueries.attachSingletons(base, baseCc)
-          baseAssign.write.mode("overwrite").parquet(assignP)
-          bSets.write.mode("overwrite").parquet(setsP)
-          DedupOps.bandKeysOfSets(bSets, BandPerms, BandRows)
-            .write.mode("overwrite").parquet(bandsP)
-          done.createNewFile()
-        }
-        ready += done.getAbsolutePath
-      }
-      (assignP, setsP, bandsP)
+                     mod: Int = 5): (String, String, String) = {
+    // geometry in the name: state fitted at (perms, rows) can never be
+    // served to a probe tuned to a different geometry
+    val p = artifact(dir, s"base_m${mod}_p${BandPerms}r$BandRows") { tmp =>
+      val base = Tables.documents(spark, dir)
+        .filter(org.apache.spark.sql.functions.expr(s"doc_id % $mod != 0"))
+      val bSets = DedupOps.setsOfShingles(
+        DedupOps.allShingles(base, "text", 3)).localCheckpoint()
+      val basePairs = DedupOps.minhashPairsOfSets(
+        bSets, BandPerms, BandRows, BandThreshold)
+      val baseCc = ClusterOps.connectedComponentsStar(basePairs, "doc_a", "doc_b")
+        .withColumnRenamed("id", "doc_id")
+      PipelineQueries.attachSingletons(base, baseCc).write.parquet(s"$tmp/assign")
+      bSets.write.parquet(s"$tmp/sets")
+      DedupOps.bandKeysOfSets(bSets, BandPerms, BandRows).write.parquet(s"$tmp/bands")
     }
+    (s"$p/assign", s"$p/sets", s"$p/bands")
+  }
 }
 
 /**
@@ -165,41 +149,22 @@ object ClusterState {
  * document lengths and document frequencies of the base split
  * (doc_id % [[ClusterState.PersistDeliveryMod]] != 0) land in parquet
  * once; [[PipelineQueries.bm25TopKPersist]]'s timed work is then the
- * delivery-sized tokenize plus the index fold. Same staleness contract
- * as ClusterState: fingerprint-keyed root, `_DONE` marker versioned by
- * the delivery modulus.
+ * delivery-sized tokenize plus the index fold. Same publish contract as
+ * ClusterState: fingerprint-keyed root, one atomically published
+ * directory per artifact, its name carrying the delivery modulus.
  */
 object IndexState {
 
-  private val ready = scala.collection.mutable.Set[String]()
+  import ClusterState.artifact
 
   /** Absolute parquet paths of (postings, dl, df) for `dir`'s base
     * split, computed and persisted on first use. */
   def bm25BasePaths(spark: SparkSession, dir: String,
                     mod: Int = ClusterState.PersistDeliveryMod)
-      : (String, String, String) = synchronized {
-    val root = ClusterState.stateRoot(dir)
-    val postingsP = new File(root, s"bm25_postings_m$mod").getAbsolutePath
-    val dlP = new File(root, s"bm25_dl_m$mod").getAbsolutePath
-    val dfP = new File(root, s"bm25_df_m$mod").getAbsolutePath
-    val done = new File(root, s"_DONE_bm25_m$mod")
-    if (!ready.contains(done.getAbsolutePath)) {
-      if (!done.exists()) {
-        val base = Tables.documents(spark, dir)
-          .filter(org.apache.spark.sql.functions.expr(s"doc_id % $mod != 0"))
-        val tfq = PipelineQueries.bm25Postings(base)
-        tfq.write.mode("overwrite").parquet(postingsP)
-        import org.apache.spark.sql.functions.{col, count, lit, sum}
-        tfq.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-          .write.mode("overwrite").parquet(dlP)
-        tfq.groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(dfP)
-        done.createNewFile()
-      }
-      ready += done.getAbsolutePath
-    }
-    (postingsP, dlP, dfP)
-  }
+      : (String, String, String) =
+    bm25Index(dir, s"bm25_m$mod")(PipelineQueries.bm25Postings(
+      Tables.documents(spark, dir)
+        .filter(org.apache.spark.sql.functions.expr(s"doc_id % $mod != 0"))))
 
   /** Absolute parquet paths of (postings, dl, df) for the FULL corpus —
     * the deployed index [[PipelineQueries.bm25TopKTakedown]] subtracts a
@@ -207,26 +172,21 @@ object IndexState {
     * [[ClusterState.fullStatePaths]]: deliveries fold INTO the base
     * index, takedowns fold OUT of the full one). */
   def bm25FullPaths(spark: SparkSession, dir: String)
-      : (String, String, String) = synchronized {
-    val root = ClusterState.stateRoot(dir)
-    val postingsP = new File(root, "bm25_postings_full").getAbsolutePath
-    val dlP = new File(root, "bm25_dl_full").getAbsolutePath
-    val dfP = new File(root, "bm25_df_full").getAbsolutePath
-    val done = new File(root, "_DONE_bm25_full")
-    if (!ready.contains(done.getAbsolutePath)) {
-      if (!done.exists()) {
-        val tfq = PipelineQueries.bm25Postings(Tables.documents(spark, dir))
-        tfq.write.mode("overwrite").parquet(postingsP)
-        import org.apache.spark.sql.functions.{col, count, lit, sum}
-        tfq.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-          .write.mode("overwrite").parquet(dlP)
-        tfq.groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(dfP)
-        done.createNewFile()
-      }
-      ready += done.getAbsolutePath
+      : (String, String, String) =
+    bm25Index(dir, "bm25_full")(PipelineQueries.bm25Postings(Tables.documents(spark, dir)))
+
+  /** (postings, dl, df) paths of the BM25 index artifact `name`, built
+    * from the postings `tfq` (evaluated only when the artifact is built). */
+  private def bm25Index(dir: String, name: String)(
+      tfq: => org.apache.spark.sql.DataFrame): (String, String, String) = {
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    val p = artifact(dir, name) { tmp =>
+      val postings = tfq
+      postings.write.parquet(s"$tmp/postings")
+      postings.groupBy("doc_id").agg(sum(col("tf")).as("dl")).write.parquet(s"$tmp/dl")
+      postings.groupBy("term").agg(count(lit(1)).as("df")).write.parquet(s"$tmp/df")
     }
-    (postingsP, dlP, dfP)
+    (s"$p/postings", s"$p/dl", s"$p/df")
   }
 
   /** Absolute parquet paths of (priors, dense model) for the trained NB
@@ -237,24 +197,15 @@ object IndexState {
     * geometry can never be served to a scorer hashing at another. */
   def nbModelPaths(spark: SparkSession, dir: String,
                    buckets: Int = PipelineQueries.NbBuckets)
-      : (String, String) = synchronized {
-    val root = ClusterState.stateRoot(dir)
-    val priorsP = new File(root, s"nb_priors_b$buckets").getAbsolutePath
-    val modelP = new File(root, s"nb_model_b$buckets").getAbsolutePath
-    val done = new File(root, s"_DONE_nb_b$buckets")
-    if (!ready.contains(done.getAbsolutePath)) {
-      if (!done.exists()) {
-        val counts = PipelineQueries.nbCounts(spark, dir, buckets)
-        val priors = PipelineQueries.nbPriorsFrom(spark, dir, counts)
-          .localCheckpoint()
-        priors.write.mode("overwrite").parquet(priorsP)
-        PipelineQueries.nbModelFrom(counts, priors, buckets)
-          .write.mode("overwrite").parquet(modelP)
-        done.createNewFile()
-      }
-      ready += done.getAbsolutePath
+      : (String, String) = {
+    val p = artifact(dir, s"nb_b$buckets") { tmp =>
+      val counts = PipelineQueries.nbCounts(spark, dir, buckets)
+      val priors = PipelineQueries.nbPriorsFrom(spark, dir, counts)
+        .localCheckpoint()
+      priors.write.parquet(s"$tmp/priors")
+      PipelineQueries.nbModelFrom(counts, priors, buckets).write.parquet(s"$tmp/model")
     }
-    (priorsP, modelP)
+    (s"$p/priors", s"$p/model")
   }
 
   /** Absolute parquet path of the BASE split's quantized vector store —
@@ -268,21 +219,10 @@ object IndexState {
     * the documents fingerprint covers both). */
   def denseStorePaths(spark: SparkSession, dir: String,
                       mod: Int = ClusterState.PersistDeliveryMod): String =
-    synchronized {
-      val root = ClusterState.stateRoot(dir)
-      val storeP = new File(root, s"dense_store_m$mod").getAbsolutePath
-      val done = new File(root, s"_DONE_dense_m$mod")
-      if (!ready.contains(done.getAbsolutePath)) {
-        if (!done.exists()) {
-          val base = Tables.embeddings(spark, dir)
-            .filter(org.apache.spark.sql.functions.expr(s"vec_id % $mod != 0"))
-          graft.ops.SimilarityOps.quantStore(base)
-            .write.mode("overwrite").parquet(storeP)
-          done.createNewFile()
-        }
-        ready += done.getAbsolutePath
-      }
-      storeP
+    artifact(dir, s"dense_store_m$mod") { tmp =>
+      val base = Tables.embeddings(spark, dir)
+        .filter(org.apache.spark.sql.functions.expr(s"vec_id % $mod != 0"))
+      graft.ops.SimilarityOps.quantStore(base).write.parquet(tmp)
     }
 
   /** Absolute parquet path of the BASE split's PQ CODES table —
@@ -295,28 +235,19 @@ object IndexState {
     * codes table encoded at one geometry can never be probed by a
     * ranker fitted at another. */
   def pqCodesPaths(spark: SparkSession, dir: String,
-                   mod: Int = ClusterState.PersistDeliveryMod): String =
-    synchronized {
-      val root = ClusterState.stateRoot(dir)
-      val geo = s"${ClusterState.PqNSub}x${ClusterState.PqSubDim}"
-      val codesP = new File(root, s"pq_codes_${geo}_m$mod").getAbsolutePath
-      val done = new File(root, s"_DONE_pqcodes_${geo}_m$mod")
-      if (!ready.contains(done.getAbsolutePath)) {
-        if (!done.exists()) {
-          val emb = Tables.embeddings(spark, dir)
-          val base = emb
-            .filter(org.apache.spark.sql.functions.expr(s"vec_id % $mod != 0"))
-          graft.ops.SimilarityOps.pqEncode(
-              graft.ops.SimilarityOps.quantStore(base),
-              ClusterState.PqNSub, ClusterState.PqSubDim,
-              fitOn = graft.ops.SimilarityOps.quantStore(emb))
-            .write.mode("overwrite").parquet(codesP)
-          done.createNewFile()
-        }
-        ready += done.getAbsolutePath
-      }
-      codesP
+                   mod: Int = ClusterState.PersistDeliveryMod): String = {
+    val geo = s"${ClusterState.PqNSub}x${ClusterState.PqSubDim}"
+    artifact(dir, s"pq_codes_${geo}_m$mod") { tmp =>
+      val emb = Tables.embeddings(spark, dir)
+      val base = emb
+        .filter(org.apache.spark.sql.functions.expr(s"vec_id % $mod != 0"))
+      graft.ops.SimilarityOps.pqEncode(
+          graft.ops.SimilarityOps.quantStore(base),
+          ClusterState.PqNSub, ClusterState.PqSubDim,
+          fitOn = graft.ops.SimilarityOps.quantStore(emb))
+        .write.parquet(tmp)
     }
+  }
 
   /** Absolute parquet path of the IMPACT-ORDERED PRUNED postings — the
     * lexical query-load scale path (static index pruning, Carmel et al.
@@ -330,35 +261,26 @@ object IndexState {
     * growth). The trade is recall against the exact ranking, priced by
     * the oracle-backed `lex_recall` gate. */
   def bm25ImpactPaths(spark: SparkSession, dir: String,
-                      m: Int = 64): String = synchronized {
-    import org.apache.spark.sql.functions.{col, count, lit, row_number, sum}
-    val root = ClusterState.stateRoot(dir)
-    val p = new File(root, s"bm25_impact_m$m").getAbsolutePath
-    val done = new File(root, s"_DONE_bm25_impact_m$m")
-    if (!ready.contains(done.getAbsolutePath)) {
-      if (!done.exists()) {
-        val (postingsP, dlP, dfP) = bm25FullPaths(spark, dir)
-        val tfq = spark.read.parquet(postingsP)
-        val dl = spark.read.parquet(dlP)
-        val dft = spark.read.parquet(dfP)
-        val stats = dl.agg(count(lit(1)).as("n_docs"),
-          sum(col("dl")).as("sum_dl"))
-        tfq.join(dft, "term").join(dl, "doc_id")
-          .crossJoin(org.apache.spark.sql.functions.broadcast(stats))
-          .selectExpr("term", "doc_id",
-            s"${PipelineQueries.bm25MicroTerm} AS s_micro")
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("term"))
-              .orderBy(col("s_micro").desc, col("doc_id").asc)))
-          .filter(col("rn") <= m)
-          .select("term", "doc_id", "s_micro")
-          .write.mode("overwrite").parquet(p)
-        done.createNewFile()
-      }
-      ready += done.getAbsolutePath
+                      m: Int = 64): String =
+    artifact(dir, s"bm25_impact_m$m") { tmp =>
+      import org.apache.spark.sql.functions.{col, count, lit, row_number, sum}
+      val (postingsP, dlP, dfP) = bm25FullPaths(spark, dir)
+      val tfq = spark.read.parquet(postingsP)
+      val dl = spark.read.parquet(dlP)
+      val dft = spark.read.parquet(dfP)
+      val stats = dl.agg(count(lit(1)).as("n_docs"),
+        sum(col("dl")).as("sum_dl"))
+      tfq.join(dft, "term").join(dl, "doc_id")
+        .crossJoin(org.apache.spark.sql.functions.broadcast(stats))
+        .selectExpr("term", "doc_id",
+          s"${PipelineQueries.bm25MicroTerm} AS s_micro")
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("term"))
+            .orderBy(col("s_micro").desc, col("doc_id").asc)))
+        .filter(col("rn") <= m)
+        .select("term", "doc_id", "s_micro")
+        .write.parquet(tmp)
     }
-    p
-  }
 
   /** Absolute parquet path of the IMPACT-RANKED full postings — every
     * (term, doc_id, s_micro) with its per-term impact rank `rn`
@@ -378,37 +300,28 @@ object IndexState {
     * each term's pruned tail, because the lists are impact-ordered;
     * terms whose whole list fits in level i have no boundary row —
     * tail 0). */
-  def bm25ImpactRankedPaths(spark: SparkSession, dir: String): String =
-    synchronized {
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
-      val root = ClusterState.stateRoot(dir)
-      // the LADDER is part of the layout identity: a store bucketed at
-      // one set of level boundaries must never serve a ladder with
-      // another — a deeper new level would look for its boundary tail
-      // rows in a bucket the old layout never split out, read tail 0,
-      // and certify UNSOUNDLY. Same convention as the PQ geometry names.
-      // The df-aware scheme (CertFrac) is part of that identity too.
-      val tag = s"nd${PipelineQueries.CertFrac}_" +
-        PipelineQueries.CertLevels.mkString("_")
-      val p = new File(root, s"bm25_impact_ranked_$tag").getAbsolutePath
-      val done = new File(root, s"_DONE_bm25_impact_ranked_$tag")
-      if (!ready.contains(done.getAbsolutePath)) {
-        if (!done.exists()) {
-          val (postingsP, dlP, dfP) = bm25FullPaths(spark, dir)
-          val tfq = spark.read.parquet(postingsP)
-          val dl = spark.read.parquet(dlP)
-          val dft = spark.read.parquet(dfP)
-          val stats = dl.agg(count(lit(1)).as("n_docs"),
-            sum(col("dl")).as("sum_dl"))
-          PipelineQueries.bm25ImpactRanked(tfq, dl, dft, stats)
-            .repartition(col("lvl"))
-            .write.mode("overwrite").partitionBy("lvl").parquet(p)
-          done.createNewFile()
-        }
-        ready += done.getAbsolutePath
-      }
-      p
+  def bm25ImpactRankedPaths(spark: SparkSession, dir: String): String = {
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    // the LADDER is part of the layout identity: a store bucketed at
+    // one set of level boundaries must never serve a ladder with
+    // another — a deeper new level would look for its boundary tail
+    // rows in a bucket the old layout never split out, read tail 0,
+    // and certify UNSOUNDLY. Same convention as the PQ geometry names.
+    // The df-aware scheme (CertFrac) is part of that identity too.
+    val tag = s"nd${PipelineQueries.CertFrac}_" +
+      PipelineQueries.CertLevels.mkString("_")
+    artifact(dir, s"bm25_impact_ranked_$tag") { tmp =>
+      val (postingsP, dlP, dfP) = bm25FullPaths(spark, dir)
+      val tfq = spark.read.parquet(postingsP)
+      val dl = spark.read.parquet(dlP)
+      val dft = spark.read.parquet(dfP)
+      val stats = dl.agg(count(lit(1)).as("n_docs"),
+        sum(col("dl")).as("sum_dl"))
+      PipelineQueries.bm25ImpactRanked(tfq, dl, dft, stats)
+        .repartition(col("lvl"))
+        .write.partitionBy("lvl").parquet(tmp)
     }
+  }
 
   /** Absolute parquet path of the CELL-PARTITIONED full-corpus PQ codes
     * — the IVF-PQ serving store ([[PipelineQueries.pqTopKIvf]]): codes
@@ -419,26 +332,18 @@ object IndexState {
     * directories at PLAN time. Geometry (8×8 PQ, `nCells`) in the
     * artifact name: codes from one fit can never serve another. */
   def pqCellCodesPaths(spark: SparkSession, dir: String,
-                       nCells: Int = 16): String = synchronized {
+                       nCells: Int = 16): String = {
     import org.apache.spark.sql.functions.col
-    val root = ClusterState.stateRoot(dir)
     val geo = s"${ClusterState.PqNSub}x${ClusterState.PqSubDim}"
-    val p = new File(root, s"pq_cell_codes_${geo}_c$nCells").getAbsolutePath
-    val done = new File(root, s"_DONE_pq_cell_codes_${geo}_c$nCells")
-    if (!ready.contains(done.getAbsolutePath)) {
-      if (!done.exists()) {
-        val store = graft.ops.SimilarityOps.quantStore(
-          Tables.embeddings(spark, dir))
-        graft.ops.SimilarityOps.pqEncode(store,
-            ClusterState.PqNSub, ClusterState.PqSubDim, fitOn = store)
-          .join(graft.ops.SimilarityOps.ivfCellOf(store, nCells), "vec_id")
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(p)
-        done.createNewFile()
-      }
-      ready += done.getAbsolutePath
+    artifact(dir, s"pq_cell_codes_${geo}_c$nCells") { tmp =>
+      val store = graft.ops.SimilarityOps.quantStore(
+        Tables.embeddings(spark, dir))
+      graft.ops.SimilarityOps.pqEncode(store,
+          ClusterState.PqNSub, ClusterState.PqSubDim, fitOn = store)
+        .join(graft.ops.SimilarityOps.ivfCellOf(store, nCells), "vec_id")
+        .repartition(col("cell"))
+        .write.partitionBy("cell").parquet(tmp)
     }
-    p
   }
 
   /** The cell-codes store read back with `cell` PINNED to LongType via
@@ -477,21 +382,9 @@ object IndexState {
     * re-derives it whenever documents OR embeddings regenerate. */
   def rrfBruteFusedPaths(spark: SparkSession, dir: String, nQ: Int = 8,
                          kIn: Int = 20, kTop: Int = 5): String =
-    synchronized {
-      val root = ClusterState.stateRoot(dir)
-      val p = new File(root, s"rrf_brute_fused_q${nQ}_k${kIn}_t$kTop")
-        .getAbsolutePath
-      val done = new File(root, s"_DONE_rrf_brute_q${nQ}_k${kIn}_t$kTop")
-      if (!ready.contains(done.getAbsolutePath)) {
-        if (!done.exists()) {
-          PipelineQueries.hybridRrf(spark, dir, nQ, kIn, kTop)
-            .select("q_id", "doc_id")
-            .write.mode("overwrite").parquet(p)
-          done.createNewFile()
-        }
-        ready += done.getAbsolutePath
-      }
-      p
+    artifact(dir, s"rrf_brute_fused_q${nQ}_k${kIn}_t$kTop") { tmp =>
+      PipelineQueries.hybridRrf(spark, dir, nQ, kIn, kTop)
+        .select("q_id", "doc_id").write.parquet(tmp)
     }
 
   /** Key-hash bucket count for the partitioned FORWARD index
@@ -513,23 +406,14 @@ object IndexState {
     * bucket: the writer repartitions by `_kb` before partitionBy, so
     * the file count is `buckets`, not `buckets × tasks`. */
   def bm25ForwardPaths(spark: SparkSession, dir: String,
-                       buckets: Int = ForwardBuckets): String = synchronized {
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val root = ClusterState.stateRoot(dir)
-    val p = new File(root, s"bm25_forward_b$buckets").getAbsolutePath
-    val done = new File(root, s"_DONE_bm25_fwd_b$buckets")
-    if (!ready.contains(done.getAbsolutePath)) {
-      if (!done.exists()) {
-        PipelineQueries.bm25Postings(Tables.documents(spark, dir))
-          .withColumn("_kb", pmod(hash(col("doc_id")), lit(buckets)))
-          .repartition(col("_kb"))
-          .write.mode("overwrite").partitionBy("_kb").parquet(p)
-        done.createNewFile()
-      }
-      ready += done.getAbsolutePath
+                       buckets: Int = ForwardBuckets): String =
+    artifact(dir, s"bm25_forward_b$buckets") { tmp =>
+      import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+      PipelineQueries.bm25Postings(Tables.documents(spark, dir))
+        .withColumn("_kb", pmod(hash(col("doc_id")), lit(buckets)))
+        .repartition(col("_kb"))
+        .write.partitionBy("_kb").parquet(tmp)
     }
-    p
-  }
 
   /** Absolute parquet path of the TRAIN split's distinct shingle-hash
     * set — the decontamination index
@@ -537,24 +421,13 @@ object IndexState {
     * fixed; every delivery checks against it), computed and persisted on
     * first use. */
   def contamIndexPaths(spark: SparkSession, dir: String): String =
-    synchronized {
-      val root = ClusterState.stateRoot(dir)
-      val idxP = new File(root, "contam_train_sh3").getAbsolutePath
-      val done = new File(root, "_DONE_contam_sh3")
-      if (!ready.contains(done.getAbsolutePath)) {
-        if (!done.exists()) {
-          val train = Tables.documents(spark, dir)
-            .selectExpr("doc_id", "text",
-              s"${PipelineQueries.splitCase} AS split")
-            .filter(org.apache.spark.sql.functions.col("split") === "train")
-          DedupOps.shingleHashes(train, "text", 3)
-            .select("h").distinct()
-            .write.mode("overwrite").parquet(idxP)
-          done.createNewFile()
-        }
-        ready += done.getAbsolutePath
-      }
-      idxP
+    artifact(dir, "contam_train_sh3") { tmp =>
+      val train = Tables.documents(spark, dir)
+        .selectExpr("doc_id", "text",
+          s"${PipelineQueries.splitCase} AS split")
+        .filter(org.apache.spark.sql.functions.col("split") === "train")
+      DedupOps.shingleHashes(train, "text", 3)
+        .select("h").distinct().write.parquet(tmp)
     }
 
   /** Eval-suite shingle-hash index for contamination_delivery — the
@@ -567,25 +440,14 @@ object IndexState {
     * whole-corpus AUDIT semantics; its cost is ∝ corpus by definition.) */
   def contamEvalIndexPaths(spark: SparkSession, dir: String,
                            evalCap: Long = 500L): String =
-    synchronized {
-      val root = ClusterState.stateRoot(dir)
-      val idxP = new File(root, s"contam_eval_sh3_c$evalCap").getAbsolutePath
-      val done = new File(root, s"_DONE_contam_eval_sh3_c$evalCap")
-      if (!ready.contains(done.getAbsolutePath)) {
-        if (!done.exists()) {
-          import org.apache.spark.sql.functions.col
-          val eval = Tables.documents(spark, dir)
-            .filter(col("doc_id") < evalCap)
-            .selectExpr("doc_id", "text",
-              s"${PipelineQueries.splitCase} AS split")
-            .filter(col("split") === "test")
-          DedupOps.shingleHashes(eval, "text", 3)
-            .select("h").distinct().coalesce(1)
-            .write.mode("overwrite").parquet(idxP)
-          done.createNewFile()
-        }
-        ready += done.getAbsolutePath
-      }
-      idxP
+    artifact(dir, s"contam_eval_sh3_c$evalCap") { tmp =>
+      import org.apache.spark.sql.functions.col
+      val eval = Tables.documents(spark, dir)
+        .filter(col("doc_id") < evalCap)
+        .selectExpr("doc_id", "text",
+          s"${PipelineQueries.splitCase} AS split")
+        .filter(col("split") === "test")
+      DedupOps.shingleHashes(eval, "text", 3)
+        .select("h").distinct().coalesce(1).write.parquet(tmp)
     }
 }

@@ -2692,7 +2692,7 @@ object PipelineQueries {
     * proves the ranking; this row prices it): the base split's postings,
     * document lengths and document frequencies come from parquet (built
     * once by [[IndexState.bm25BasePaths]], the ClusterState discipline —
-    * fingerprint-keyed, `_DONE`-marked), and the timed work is the
+    * fingerprint-keyed, atomically published), and the timed work is the
     * DELIVERY-sized tokenize (doc_id % [[ClusterState.PersistDeliveryMod]]
     * = 0, 2% of the corpus) plus the index merge: postings/dl union
     * disjoint doc partitions exactly; df folds as a vocabulary-keyed sum;
