@@ -55,9 +55,28 @@ object Bench {
     } catch { case _: Throwable => -1L }
   }
 
+  /** The data dir of a bench run (`SPARK_GRAFT_SF_DIR`). */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The session every main but ScaleProbe runs on: [[GraftSession]] at
+    * `SPARK_GRAFT_CPUS` local cores (4 by default), no UI. */
+  private[graft] def session(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(appName, cpus)
+      .master(s"local[$cpus]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `runMain graft.Bench [query ...]` times the named [[SparkEntry.queries]]
+    * entries, or all of them, and writes BENCH_LAST.json, BENCH_RUNS.json
+    * and CC_ROUNDS.json in the working directory. */
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val selected = SparkEntry.named(args.toSeq)
+    val sfDir = Bench.sfDir
     // median-of-N per query (N=3 default): one shot was hostage to ambient
     // host contention — the r5 gate artifact disagreed with same-code
     // reruns by up to 10× on single queries
@@ -65,11 +84,7 @@ object Bench {
     // the whole bench run with a NumberFormatException
     val reps = scala.util.Try(sys.env("SPARK_GRAFT_BENCH_REPS").trim.toInt)
       .getOrElse(3).max(1)
-    val spark = GraftSession.builder("graft-bench", cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-bench")
     // per-query untimed warmup reps (below) replace the old global "warm
     // the first query" pass: JIT/codegen warmup of a CODEPATH otherwise
     // lands on whichever query reaches it first alphabetically — the r6
@@ -120,7 +135,7 @@ object Bench {
     // makes such windows directly visible across query boundaries instead
     // of inferred from adjacency.
     val benchT0 = System.nanoTime()
-    val allRuns = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val allRuns = selected.map { case (name, fn) =>
       // untimed: compiles/loads this query's whole codepath (codegen
       // classes, expression JIT, parquet footers) so rep 1 measures the
       // plan, not the first-touch costs
@@ -164,13 +179,18 @@ object Bench {
     // line outgrew the driver's stdout tail buffer
     def fmt(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    import Verify.jsonString
     val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .map { case (k, v) => jsonString(k) + ":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map(jsonString).mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"warmups":$warmups,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"warmups":$warmups,"queries":$qs,"failed":$failedJson,"sf":${jsonString(sfDir)}}"""
+    // one `"<field>":{"<query>":[per-rep values]}` member of BENCH_RUNS.json
+    def perRep(field: String, value: ((Double, Double, Long, Long)) => String): String =
+      allRuns.map { case (k, ts) => jsonString(k) + ":" + ts.map(value).mkString("[", ",", "]") }
+        .mkString(jsonString(field) + ":{", ",", "}")
     // durable copies first: even if the stdout tail is clipped again, the
     // full metrics object survives as a whole file in the repo; the
     // per-rep detail (for variance audits) goes to its own file so the
@@ -179,41 +199,27 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_LAST.json"),
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val runsJson = allRuns.sortBy(_._1)
-        .map { case (k, ts) => "\"" + k + "\":" + ts.map(t => fmt(t._1)).mkString("[", ",", "]") }
-        .mkString("{\"reps\":" + reps + ",\"runs\":{", ",", "},") +
+      val runsJson = Seq(
+        perRep("runs", t => fmt(t._1)),
         // per-rep start offsets (seconds since bench start): lets a
         // variance audit see whether inflated reps share one wall-clock
         // window across adjacent queries (host contention) or track the
         // query itself (a real plan cost)
-        allRuns.sortBy(_._1)
-          .map { case (k, ts) => "\"" + k + "\":" + ts.map(t => fmt(t._2)).mkString("[", ",", "]") }
-          .mkString("\"starts\":{", ",", "},") +
+        perRep("starts", t => fmt(t._2)),
         // per-rep stop-the-world GC millis inside each rep + block-manager
         // disk megabytes at rep end (r9 escalating-rep forensics: is an
         // inflated rep paying GC, reading past residue, or neither?)
-        allRuns.sortBy(_._1)
-          .map { case (k, ts) => "\"" + k + "\":" + ts.map(_._3.toString).mkString("[", ",", "]") }
-          .mkString("\"gc_ms\":{", ",", "},") +
-        allRuns.sortBy(_._1)
-          .map { case (k, ts) => "\"" + k + "\":" +
-            // -1 = sampling failed; keep the sentinel instead of
-            // truncating it into a plausible-looking 0 MB
-            ts.map(t => (if (t._4 < 0) -1L else t._4 / (1024 * 1024)).toString)
-              .mkString("[", ",", "]") }
-          .mkString("\"disk_mb\":{", ",", "}}\n")
+        perRep("gc_ms", _._3.toString),
+        // -1 = sampling failed; keep the sentinel instead of
+        // truncating it into a plausible-looking 0 MB
+        perRep("disk_mb", t => (if (t._4 < 0) -1L else t._4 / (1024 * 1024)).toString)
+      ).mkString(s"""{"reps":$reps,""", ",", "}\n")
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_RUNS.json"),
         runsJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // interpolated identifiers are JSON-escaped: today's query keys and
-      // CC variants are clean, but a future key containing a quote or
-      // backslash must not silently emit an invalid artifact
-      def esc(s: String): String =
-        s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
       val ccJson = ccRounds
         .map { case (q, rep, r) =>
-          s"""{"query":"${esc(q)}","rep":$rep,"variant":"${esc(r.variant)}","rounds":${r.rounds},""" +
+          s"""{"query":${jsonString(q)},"rep":$rep,"variant":${jsonString(r.variant)},"rounds":${r.rounds},""" +
             s""""total_ms":${r.totalMillis},"round_ms":${r.roundMillis.mkString("[", ",", "]")}}"""
         }
         .mkString("[", ",\n ", "]\n")

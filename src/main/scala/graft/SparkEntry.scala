@@ -218,7 +218,7 @@ object SparkEntry {
     "bm25_topk_takedown" -> ((s, d) => PipelineQueries.bm25TopKTakedown(s, d)),
     // the removal half's STORE PROBE: the df down-fold of a bounded
     // takedown batch read from the partition-bucketed forward index with
-    // plan-time pruning (PartitionFilters on _kb — PlanCheck asserts it)
+    // plan-time pruning (PartitionFilters on _kb — PlanShapeSpec asserts it)
     "bm25_downfold_probe" -> ((s, d) => PipelineQueries.bm25DownfoldProbe(s, d)),
     "hybrid_rrf"        -> ((s, d) => PipelineQueries.hybridRrf(s, d)),
     "hybrid_rrf_persist" -> ((s, d) => PipelineQueries.hybridRrfPersist(s, d)),
@@ -311,6 +311,16 @@ object SparkEntry {
     // the table's offsets (index-directed, never a payload scan)
     "multimodal_frames"   -> (PipelineQueries.multimodalFrames _),
   )
+
+  /** The entries of [[queries]] with these names, or all of them for no
+    * names, in name order. An unknown name fails before any query is
+    * built, and the message lists every unknown name. */
+  def named(names: Seq[String]): Seq[(String, Q)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains).distinct
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    all.toSeq.filter { case (n, _) => names.isEmpty || names.contains(n) }.sortBy(_._1)
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

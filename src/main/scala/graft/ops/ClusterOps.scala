@@ -41,14 +41,16 @@ object ClusterOps {
     * question — driver-measured dedup_clusters cost was 5× its builder-
     * local cost with identical plans, and only per-round evidence from
     * the gate environment can name the mechanism). Recording is a few
-    * appends per QUERY (not per row); zero cost at any data scale. */
+    * appends per QUERY (not per row); zero cost at any data scale.
+    * [[graft.ScaleProbe]] drains it too, into the `cc_rounds` of its
+    * SCALE_RUNS.jsonl rows. */
   object CcStats {
     final case class Run(variant: String, rounds: Int, totalMillis: Long,
                          roundMillis: Seq[Long])
     /** Undrained entries beyond this are dropped oldest-first: only
-      * graft.Bench drains, so a long-lived process that never does (a
-      * streaming maintainer folding deliveries for weeks) must not grow
-      * driver memory without bound. */
+      * graft.Bench and graft.ScaleProbe drain, so a long-lived process
+      * that never does (a streaming maintainer folding deliveries for
+      * weeks) must not grow driver memory without bound. */
     private val MaxBuffered = 512
     private val buf = scala.collection.mutable.ArrayBuffer[Run]()
     private[ClusterOps] def record(r: Run): Unit = synchronized {

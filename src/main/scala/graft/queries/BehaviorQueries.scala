@@ -30,15 +30,13 @@ object BehaviorQueries {
   private def ev(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
 
-  private def itemId = get_json_object(col("props"), "$.k").cast("long")
-
   /** A1+T1 HotItems: top-3 items per sliding 1h/15m window of views.
     * Reference: HotItem.java:73-80 (window agg) + :134-192 (TopN process
     * fn); here one groupBy + rank-over-window, no state/timers. */
   def hotItemsTopN(spark: SparkSession, dir: String): DataFrame = {
     val views = ev(spark, dir)
       .filter(col("event_type") === "view")
-      .select(itemId.as("item_id"), col("ts"))
+      .select(Tables.itemId.as("item_id"), col("ts"))
     val counts = WindowOps.epochWindow(
       WindowOps.slidingCount(views, col("ts"), "1 hour", "15 minutes", col("item_id")))
     RankOps.topN(counts, 3, Seq(col("window_start")),
@@ -283,7 +281,7 @@ object BehaviorQueries {
   def itemPairs(spark: SparkSession, dir: String,
                 maxItemsPerUser: Long = 2000L): DataFrame = {
     val baskets = ev(spark, dir)
-      .withColumn("item", itemId)
+      .withColumn("item", Tables.itemId)
       .filter(col("item").isNotNull)
       .groupBy("user_id")
       .agg(sort_array(collect_set(col("item"))).as("items"))
@@ -643,7 +641,7 @@ object BehaviorQueries {
       .orderBy(col("sec").asc, col("event_id").asc)
     val e = ev(spark, dir)
       .withColumn("sec", col("ts").cast("long"))
-      .withColumn("item", itemId)
+      .withColumn("item", Tables.itemId)
       .filter(col("item").isNotNull)
     val edges = e
       .withColumn("dst", lead(col("item"), 1).over(w))
@@ -802,7 +800,7 @@ object BehaviorQueries {
   def adProvince(spark: SparkSession, dir: String): DataFrame = {
     val clicks = ev(spark, dir)
       .filter(col("event_type") === "click")
-      .select(concat(lit("p"), (itemId % 10).cast("string")).as("province"), col("ts"))
+      .select(concat(lit("p"), (Tables.itemId % 10).cast("string")).as("province"), col("ts"))
     WindowOps.epochWindow(
         WindowOps.slidingCount(clicks, col("ts"), "1 hour", "15 minutes",
           col("province")))

@@ -355,7 +355,7 @@ object IndexState {
     * because Spark's UnwrapCastInBinaryComparison happens to unwrap the
     * implicit cast (version-fragile). A user schema makes the partition
     * column NATIVELY long (no cast in the plan at all), so the
-    * PartitionFilters pruning PlanCheck asserts is unconditional. All
+    * PartitionFilters pruning PlanShapeSpec asserts is unconditional. All
     * serving-path consumers read through this. */
   def readPqCellCodes(spark: SparkSession, dir: String,
                       nCells: Int = 16): org.apache.spark.sql.DataFrame = {

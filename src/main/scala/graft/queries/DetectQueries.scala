@@ -20,8 +20,6 @@ object DetectQueries {
     Tables.events(spark, dir)
       .withColumn("sec", col("ts").cast("long"))
 
-  private def itemId = get_json_object(col("props"), "$.k").cast("long")
-
   /** C2 LoginFail (immediate variant, n=2 within 30 min): adjacent error
     * events per user. Reference: LoginFail.java:145-196. */
   def loginFail(spark: SparkSession, dir: String): DataFrame =
@@ -85,7 +83,7 @@ object DetectQueries {
     // "order id" twin: (user, item) pairs — sparse enough that every
     // outcome (incl. pay-without-create and create-without-pay) occurs
     val e = ev(spark, dir)
-      .withColumn("key", col("user_id") * 100 + itemId % 100)
+      .withColumn("key", col("user_id") * 100 + Tables.itemId % 100)
     val w = Window.partitionBy(col("key")).orderBy(col("sec"), col("event_id"))
     def first(eventType: String, idAs: String, tsAs: String): DataFrame =
       e.filter(col("event_type") === eventType)
@@ -139,7 +137,7 @@ object DetectQueries {
 
   private def clicks(spark: SparkSession, dir: String): DataFrame =
     ev(spark, dir).filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), itemId.mod(2).as("ad_id"), col("sec"))
+      .select(col("event_id"), col("user_id"), Tables.itemId.mod(2).as("ad_id"), col("sec"))
 
   /** F6 blacklist filter, pass-through side: first 2 clicks per
     * (user, ad, event-time day) survive.

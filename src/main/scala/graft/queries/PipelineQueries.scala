@@ -220,7 +220,7 @@ object PipelineQueries {
     * broadcast hash join — measured flat across a 30× corpus
     * (SCALE.md `contamination_delivery`). */
   /** The stand-in delivery's doc_id bounds — named and shared with
-    * [[graft.PlanCheck]]'s pushed-filter assertion (which interpolates
+    * graft.PlanShapeSpec's pushed-filter assertion (which interpolates
     * [[ContamDeliveryLo]] into the expected `PushedFilters` string) and
     * with the DuckDB oracle, so changing the bound cannot silently
     * desynchronize the query, its plan gate and its oracle. */
@@ -1427,7 +1427,7 @@ object PipelineQueries {
   /** Corpus (doc, lang, bucket, cnt) feature counts — the ONE corpus-sized
     * exchange of the DSIR family; its canonically-equal subtree appears
     * under both [[dsirWeights]]'s scoring branch and [[dsirModel]], so AQE
-    * materializes it once (ReusedExchange-verified via ExecPlan). */
+    * materializes it once (ReusedExchange-verified via `graft.Plans executed`). */
   private def dsirFeats(spark: SparkSession, dir: String, buckets: Int): DataFrame =
     // one-split corpora otherwise serialize the per-token md5 explode on a
     // single task (see [[graft.ops.Parallelism]]); no-op on real corpora.
@@ -1705,7 +1705,7 @@ object PipelineQueries {
   /** IVF-PQ serve from the persisted cell-partitioned codes store
     * ([[IndexState.pqCellCodesPaths]]): each query probes its 4
     * L2-nearest of 16 coarse cells and ADC-scores ONLY those cells'
-    * stored codes (plan-time pruned partitions — PlanCheck asserts the
+    * stored codes (plan-time pruned partitions — PlanShapeSpec asserts the
     * cell PartitionFilters), then exact-re-ranks the bounded shortlist
     * ([[IvfPqShortlist]]). The
     * query-load scale path: flat-ADC serve cost is queries × corpus

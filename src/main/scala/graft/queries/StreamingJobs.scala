@@ -1292,7 +1292,7 @@ object StreamingJobs {
       sink: DataFrame => Unit): StreamingQuery = {
     val counts = eventsStream(spark, dir)
       .filter(col("event_type") === "view")
-      .select(get_json_object(col("props"), "$.k").cast("long").as("item_id"), col("ts"))
+      .select(Tables.itemId.as("item_id"), col("ts"))
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("item_id"))
       .agg(count(lit(1)).as("cnt"))
     counts.writeStream.outputMode("complete")
@@ -1318,9 +1318,7 @@ object StreamingJobs {
     graft.ops.WindowOps.slidingCount(
       eventsStream(spark, dir)
         .filter(col("event_type") === "click")
-        .select(concat(lit("p"),
-          (get_json_object(col("props"), "$.k").cast("long") % 10).cast("string"))
-          .as("province"), col("ts")),
+        .select(concat(lit("p"), (Tables.itemId % 10).cast("string")).as("province"), col("ts")),
       col("ts"), "1 hour", "15 minutes", col("province"))
 
   /** A4/A5 UV as a stream: tumbling-day distinct viewers via the HLL
@@ -1552,7 +1550,7 @@ object StreamingJobs {
     import spark.implicits._
     val keyed = eventsStream(spark, dir)
       .select(col("user_id").as("key"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"))
+        Tables.itemId.as("item"))
       .filter(col("item").isNotNull)
       .as[Detectors.ItemEvent]
     Detectors.itemPairIncrements(keyed, maxItemsPerUser, streaming = true)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -89,6 +89,11 @@ object Tables {
         (eventsRawSchema,
           df => df.withColumn("ts", timestamp_micros(expr("ts div 1000"))))
     }
+
+  /** The item id of a behavior event: the `k` field of its `props` JSON,
+    * as a long (the reference's `itemId`; province and ad keys derive
+    * from it too). */
+  def itemId: Column = get_json_object(col("props"), "$.k").cast("long")
 
   /** Behavior-event stream table: the Spark analogue of the reference's
     * `UserBehavior`/`AdClickEvent`/`LoginEvent` CSV streams

@@ -33,6 +33,22 @@ class QueriesSmokeSpec extends SparkSpec {
     }
   }
 
+  test("named selects in name order, all for no names, and lists every unknown name") {
+    assert(SparkEntry.named(Nil).map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.named(Seq("tx_match", "hot_items_topn")).map(_._1) ==
+      Seq("hot_items_topn", "tx_match"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.named(Seq("hot_items_topn", "hot_itmes_topn", "tx_macth")))
+    assert(e.getMessage.contains("unknown queries: hot_itmes_topn, tx_macth"), e.getMessage)
+  }
+
+  test("the mains' JSON strings round-trip through a JSON parser") {
+    val s = "q\"uote back\\slash new\nline\ttab \u0001 µ"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Verify.jsonString(s), classOf[String])
+    assert(parsed == s)
+  }
+
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")
